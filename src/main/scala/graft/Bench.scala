@@ -438,8 +438,8 @@ object Bench {
     *  - the convergence run (supersteps, cells*iterations/sec),
     *  - per-iteration rates of the block path (96 iters = 6 supersteps)
     *    vs the declarative cell path (16 iters) -> the blocking speedup,
-    *  - measured shuffle bytes/superstep vs the O(blocks*2k*N) ghost math
-    *    (measured includes row serialization overhead over raw doubles).
+    *  - stages per superstep job of the convergence solve, from a listener
+    *    (expect 1: the halo is a narrow dependency, not a shuffle stage).
     * Cells-level bit-parity block==cell==oracle is LaplaceSpec's job; this
     * entry is throughput evidence only.
     */
@@ -448,31 +448,30 @@ object Bench {
     val blocks = 32
     val stepK = 16
     val cells = n.toLong * n
-    // shuffle bytes measured via listener (events drain async — small sleep)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    // jobs and stages of the solve itself (tagged by job group, so the
+    // grid count after it stays out); events drain async — small sleep
+    val group = "solver-witness"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    def inSolve(p: java.util.Properties): Boolean =
+      p != null && p.getProperty("spark.jobGroup.id") == group
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
+      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (inSolve(s.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (inSolve(s.properties)) stages.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val r = graft.laplace.BlockSolver.solve(spark, n, numBlocks = blocks)
+    spark.sparkContext.setJobGroup(group, group)
+    val r = try graft.laplace.BlockSolver.solve(spark, n, numBlocks = blocks)
+      finally spark.sparkContext.clearJobGroup()
     r.grid.count()
     val convSec = (System.nanoTime() - t0) / 1e9
     Thread.sleep(2000) // listener bus drains asynchronously
     spark.sparkContext.removeSparkListener(listener)
     val supersteps = (r.iterations + stepK - 1) / stepK
-    val measuredMb = shuffleBytes.get / 1e6
-    // ghost zones per superstep: interior blocks ship 2, the two boundary
-    // blocks ship 1 -> 2*blocks - 2 zones of 2k rows x N doubles. When
-    // convergence lands mid-superstep the solver runs one aborted full
-    // superstep plus the redo tail (both shuffle ghosts), so count one
-    // extra superstep in that case (iterations not a multiple of stepK).
-    val ghostSupersteps = supersteps + (if (r.iterations % stepK == 0) 0 else 1)
-    val predictedMb =
-      ghostSupersteps.toLong * (2 * blocks - 2) * 2 * stepK * n * 8 / 1e6
     val tb0 = System.nanoTime()
     graft.laplace.BlockSolver.solve(spark, n, numBlocks = blocks, maxIterations = 96).grid.count()
     val blockSecPerIter = (System.nanoTime() - tb0) / 1e9 / 96
@@ -483,6 +482,6 @@ object Bench {
       s""""supersteps":$supersteps,"cells_iters_per_sec":${(cells * r.iterations / convSec).toLong},""" +
       s""""block_sec_per_iter":$blockSecPerIter,"cell_sec_per_iter":$cellSecPerIter,""" +
       s""""temporal_blocking_speedup":${cellSecPerIter / blockSecPerIter},""" +
-      s""""shuffle_mb_measured":$measuredMb,"ghost_mb_predicted":$predictedMb}"""
+      s""""solve_jobs":${jobs.get},"stages_per_superstep":${stages.get.toDouble / jobs.get}}"""
   }
 }

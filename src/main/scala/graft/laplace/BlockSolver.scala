@@ -1,9 +1,11 @@
 package graft.laplace
 
-import org.apache.spark.Partitioner
+import org.apache.spark.{NarrowDependency, OneToOneDependency, Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.InternalBridge
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.AccumulatorV2
 
 /** One grid row: row index + all N cell values. The performance
@@ -56,50 +58,156 @@ final case class BlockLayout(n: Int, blocks: Int) {
   def blockOf(i: Int): Int =
     if (i < rem * (base + 1)) i / (base + 1)
     else rem + (i - rem * (base + 1)) / base
-  /** Blocks (other than the owner) whose ghost zone of depth `ghost`
-    * contains row i: exactly those whose row range intersects
-    * [i-ghost, i+ghost] — a contiguous id range, possibly spanning
-    * several thin blocks when block size < ghost.
+  /** Blocks whose row range intersects block b's ghost-extended range
+    * [lo(b)-ghost, hi(b)+ghost] (b itself included): a contiguous id
+    * range, spanning several thin blocks when block size < ghost.
     */
-  def ghostDests(i: Int, ghost: Int): Range = {
-    val first = blockOf(math.max(0, i - ghost))
-    val last = blockOf(math.min(n - 1, i + ghost))
-    first to last
-  }
+  def haloBlocks(b: Int, ghost: Int): Range =
+    blockOf(math.max(0, lo(b) - ghost)) to blockOf(math.min(n - 1, hi(b) + ghost))
 }
 
-/** Identity partitioner on block ids: block b lives in partition b, so a
-  * `partitionBy` on ghost messages IS the reference's peer-to-peer halo
-  * send (`laplace-par.c:371-417`) — each executor receives exactly the
-  * edge rows its blocks need, nothing routes through the driver.
+/** A contiguous run of grid rows starting at row `lo`: a whole block of
+  * the solver state, or one edge band of a block.
   */
-final class BlockPartitioner(blocks: Int) extends Partitioner {
-  override def numPartitions: Int = blocks
-  override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-  override def equals(o: Any): Boolean = o match {
-    case p: BlockPartitioner => p.numPartitions == blocks
-    case _ => false
+private[laplace] final case class RowBand(lo: Int, rows: Array[Array[Double]]) {
+  def hi: Int = lo + rows.length - 1
+}
+
+/** Block b's halo sources: the partitions of the edge RDD whose blocks
+  * overlap b's ghost zone of depth `ghost` — the reference's neighbour
+  * sends (`laplace-par.c:371-417`) as a closed-form narrow dependency.
+  */
+private final class HaloDependency(edges: RDD[RowBand], layout: BlockLayout, ghost: Int)
+    extends NarrowDependency[RowBand](edges) {
+  override def getParents(b: Int): Seq[Int] = layout.haloBlocks(b, ghost).filter(_ != b)
+}
+
+/** Task b's inputs, resolved on the driver: block b of the state and the
+  * edge partitions its [[HaloDependency]] names.
+  */
+private final class SuperstepPartition(val index: Int, val own: Partition,
+    val halo: Array[Partition]) extends Partition
+
+/** One superstep: partition b runs `kk` red-black iterations on block b
+  * plus its ghost rows. Reads block b of `state` (one-to-one, listed first
+  * so the scheduler places task b where block b is cached) and the edge
+  * bands of its [[HaloDependency]] parents; both dependencies are narrow,
+  * so a superstep is a single stage with no shuffle files.
+  */
+private final class SuperstepRDD(
+    private var state: RDD[RowBand],
+    private var edges: RDD[RowBand],
+    layout: BlockLayout,
+    kk: Int,
+    omega: Double,
+    private var acc: MaxVecAccumulator)
+    extends RDD[RowBand](state.context,
+      Seq(new OneToOneDependency(state), new HaloDependency(edges, layout, 2 * kk))) {
+
+  override protected def getPartitions: Array[Partition] = {
+    val halo = dependencies(1).asInstanceOf[HaloDependency]
+    state.partitions.map(p =>
+      new SuperstepPartition(p.index, p, halo.getParents(p.index).map(edges.partitions).toArray))
   }
-  override def hashCode: Int = blocks
+
+  override def compute(split: Partition, ctx: TaskContext): Iterator[RowBand] = {
+    val part = split.asInstanceOf[SuperstepPartition]
+    val n = layout.n
+    val ghost = 2 * kk
+    val own = state.iterator(part.own, ctx).next()
+    val extLo = math.max(0, own.lo - ghost)
+    val extHi = math.min(n - 1, own.hi + ghost)
+    // private working copy: the cached inputs stay intact for a tail redo
+    val work = new Array[Array[Double]](extHi - extLo + 1)
+    var r = 0
+    while (r < own.rows.length) { work(own.lo + r - extLo) = own.rows(r).clone(); r += 1 }
+    for (p <- part.halo; band <- edges.iterator(p, ctx);
+         i <- math.max(band.lo, extLo) to math.min(band.hi, extHi))
+      work(i - extLo) = band.rows(i - band.lo).clone()
+    val localMax = relax(work, extLo, own.lo, own.hi)
+    var t = 0
+    while (t < kk) {
+      if (localMax(t) != Double.NegativeInfinity) acc.add((t, localMax(t)))
+      t += 1
+    }
+    Iterator.single(RowBand(own.lo, work.slice(own.lo - extLo, own.hi - extLo + 1)))
+  }
+
+  /** `kk` red-black iterations in place over `work` (row r at index
+    * r - extLo); returns the per-iteration max |diff| over the owned rows
+    * [lo, hi] (NegativeInfinity where no owned cell moved).
+    */
+  private def relax(work: Array[Array[Double]], extLo: Int, lo: Int, hi: Int): Array[Double] = {
+    val n = layout.n
+    val oneMinusOmega = 1.0 - omega
+    val extHi = extLo + work.length - 1
+    val localMax = Array.fill(kk)(Double.NegativeInfinity)
+    val rStart = math.max(extLo + 1, 1)
+    val rEnd = math.min(extHi - 1, n - 2)
+    var t = 0
+    while (t < kk) {
+      var color = 0
+      while (color <= 1) {
+        var r = rStart
+        while (r <= rEnd) {
+          val up = work(r - 1 - extLo)
+          val cur = work(r - extLo)
+          val down = work(r + 1 - extLo)
+          val ownedRow = r >= lo && r <= hi
+          var j = 1 + (if (r % 2 == color) 1 else 0)
+          while (j < n - 1) {
+            val tmp = (up(j) + down(j) + cur(j - 1) + cur(j + 1)) / 4.0
+            val v2 = oneMinusOmega * cur(j) + omega * tmp
+            if (ownedRow) {
+              val diff = math.abs(cur(j) - v2)
+              if (diff > localMax(t)) localMax(t) = diff
+            }
+            cur(j) = v2
+            j += 2
+          }
+          r += 1
+        }
+        color += 1
+      }
+      t += 1
+    }
+    localMax
+  }
+
+  // once the local checkpoint truncates the lineage, drop the parents too,
+  // so later task binaries do not carry the chain of earlier supersteps
+  override protected def clearDependencies(): Unit = {
+    super.clearDependencies()
+    state = null
+    edges = null
+    acc = null
+  }
 }
 
 /** Block-row SOR solver with TEMPORAL BLOCKING: each superstep runs k
   * full red-black iterations per task using a 2k-row ghost zone on each
-  * partition edge.
+  * block edge.
   *
   * Why: the reference exchanges one halo per half-sweep
   * (`laplace-par.c:371-417`); a naive Spark port pays a full job launch
   * per half-sweep, so scheduling overhead dominates any realistic grid.
-  * Classic ghost-zone (trapezoidal) blocking amortizes that: per
-  * superstep,
+  * Classic ghost-zone (trapezoidal) blocking amortizes that. The state is
+  * one [[RowBand]] record per block, block b in partition b, locally
+  * checkpointed; beside it a persisted EDGE RDD holds, in partition d, the
+  * first and last 2k rows of block d (the whole block when it has at most
+  * 4k rows). Per superstep,
   *
-  *  1. ONE keyed shuffle routes every row within 2k rows of a block
-  *     boundary to the neighboring blocks that need it (`ghostDests` is
-  *     closed-form, so the exchange is executor-to-executor — the
-  *     driver never sees a cell value);
-  *  2. a co-partitioned `cogroup` (narrow on the state side — both RDDs
-  *     share the [[BlockPartitioner]]) hands each block its owned rows
-  *     plus ghosts, and the task runs 2k half-sweeps in-place, locally.
+  *  1. task b reads block b through a one-to-one dependency on the state —
+  *     listed first, so the scheduler prefers the executor caching block b —
+  *     and the edge partitions of the blocks overlapping [lo(b)-2k,
+  *     hi(b)+2k] through a narrow [[HaloDependency]] (closed-form in
+  *     [[BlockLayout.haloBlocks]], several hops deep when blocks are thin).
+  *     At most 2·2k rows per neighbour move executor-to-executor through
+  *     the block manager, as the reference's point-to-point halo does; the
+  *     driver never sees a cell value and nothing is shuffled;
+  *  2. the task runs 2k half-sweeps in place, locally, and emits its new
+  *     block; one action on the new edge RDD — taken after the new state
+  *     is marked for local checkpoint — materialises both in ONE stage.
   *
   * Correctness of the redundant compute: each half-sweep invalidates one
   * more row at each ghost edge (its neighbor is missing), so after k
@@ -120,151 +228,103 @@ final class BlockPartitioner(blocks: Int) extends Partitioner {
   * the final grid/#iters/diff match the reference's stop-after-that-
   * iteration semantics exactly.
   *
-  * At 1000 executors on a 10^6-point dimension, per-superstep network is
-  * O(P·k·N) doubles moving point-to-point between neighboring executors
-  * (the same volume the reference's MPI halo moves, amortized over k
-  * iterations) and job count drops 2k-fold vs per-sweep exchange; driver
-  * traffic per superstep is one accumulator vector of k doubles per
-  * task, independent of N.
+  * At P executors on a 10^6-point dimension, a superstep is P tasks in
+  * one stage, each reading its own cached block plus O(k·N) halo doubles
+  * from at most a few neighbouring executors (the reference's MPI halo
+  * volume, amortized over k iterations); job count drops 2k-fold vs
+  * per-sweep exchange, and driver traffic per superstep is one
+  * accumulator vector of k doubles per task, independent of N.
   */
 object BlockSolver {
 
-  /** State rows keyed by owning block, partitioned block b -> partition b. */
-  private def initialState(spark: SparkSession, layout: BlockLayout): RDD[(Int, GridRow)] = {
+  /** Block b as one record in partition b. */
+  private def initialState(sc: SparkContext, layout: BlockLayout): RDD[RowBand] = {
     val n = layout.n
-    spark.sparkContext
-      .parallelize(0 until layout.blocks, layout.blocks)
-      .flatMap { b =>
-        (layout.lo(b) to layout.hi(b)).iterator.map(i =>
-          (b, GridRow(i, Array.tabulate(n)(j => Laplace.initialValue(i, j, n)))))
-      }
-      .partitionBy(new BlockPartitioner(layout.blocks))
-  }
-
-  def initialRows(spark: SparkSession, n: Int, numBlocks: Int): Dataset[GridRow] = {
-    import spark.implicits._
-    val blocks = math.max(1, math.min(numBlocks, n))
-    spark.createDataset(initialState(spark, BlockLayout(n, blocks)).values)
-  }
-
-  /** Run `kk` full iterations in one job. Emits owned rows only. The only
-    * wide dependency is the ghost-row `partitionBy` — O(blocks * 2kk)
-    * rows — and the cogroup is narrow on both sides (shared partitioner).
-    */
-  private def superstep(state: RDD[(Int, GridRow)], layout: BlockLayout, kk: Int,
-      omega: Double, acc: MaxVecAccumulator): RDD[(Int, GridRow)] = {
-    val n = layout.n
-    val ghost = 2 * kk
-    val part = new BlockPartitioner(layout.blocks)
-    val lay = layout
-    val ghosts = state
-      .flatMap { case (b, r) => lay.ghostDests(r.i, ghost).collect {
-        case d if d != b => (d, r)
-      } }
-      .partitionBy(part)
-    val oneMinusOmega = 1.0 - omega
-
-    state.cogroup(ghosts, part).flatMapValues { case (ownedIt, ghostIt) =>
-      val owned = ownedIt.toArray.sortBy(_.i)
-      if (owned.isEmpty) Iterator.empty
-      else {
-        val lo = owned.head.i
-        val hi = owned.last.i
-        val extLo = math.max(0, lo - ghost)
-        val extHi = math.min(n - 1, hi + ghost)
-        val work = new Array[Array[Double]](extHi - extLo + 1)
-        owned.foreach(r => work(r.i - extLo) = r.vals.clone())
-        ghostIt.foreach { r =>
-          if (r.i >= extLo && r.i <= extHi) work(r.i - extLo) = r.vals.clone()
-        }
-        val localMax = Array.fill(kk)(Double.NegativeInfinity)
-        val rStart = math.max(extLo + 1, 1)
-        val rEnd = math.min(extHi - 1, n - 2)
-        var t = 0
-        while (t < kk) {
-          var color = 0
-          while (color <= 1) {
-            var r = rStart
-            while (r <= rEnd) {
-              val up = work(r - 1 - extLo)
-              val cur = work(r - extLo)
-              val down = work(r + 1 - extLo)
-              val ownedRow = r >= lo && r <= hi
-              var j = 1 + (if (r % 2 == color) 1 else 0)
-              while (j < n - 1) {
-                val tmp = (up(j) + down(j) + cur(j - 1) + cur(j + 1)) / 4.0
-                val v2 = oneMinusOmega * cur(j) + omega * tmp
-                if (ownedRow) {
-                  val diff = math.abs(cur(j) - v2)
-                  if (diff > localMax(t)) localMax(t) = diff
-                }
-                cur(j) = v2
-                j += 2
-              }
-              r += 1
-            }
-            color += 1
-          }
-          t += 1
-        }
-        t = 0
-        while (t < kk) {
-          if (localMax(t) != Double.NegativeInfinity) acc.add((t, localMax(t)))
-          t += 1
-        }
-        owned.iterator.map(r => GridRow(r.i, work(r.i - extLo)))
-      }
+    sc.parallelize(0 until layout.blocks, layout.blocks).mapPartitionsWithIndex { (b, _) =>
+      Iterator.single(RowBand(layout.lo(b),
+        Array.tabulate(layout.hi(b) - layout.lo(b) + 1, n)((r, j) =>
+          Laplace.initialValue(layout.lo(b) + r, j, n))))
     }
   }
 
+  /** The first and last `depth` rows of a block, or the whole block when
+    * those overlap. Row arrays are shared with the state, never copied.
+    */
+  private def edgeBands(block: RowBand, depth: Int): Iterator[RowBand] =
+    if (block.rows.length <= 2 * depth) Iterator.single(block)
+    else Iterator(RowBand(block.lo, block.rows.take(depth)),
+      RowBand(block.hi - depth + 1, block.rows.takeRight(depth)))
+
+  /** Marks `state` for local checkpoint and materialises it together with
+    * its edge RDD in one single-stage job: computing edge partition b
+    * computes, caches and checkpoints block b on the way.
+    */
+  private def materialize(state: RDD[RowBand], depth: Int): RDD[RowBand] = {
+    state.localCheckpoint()
+    val edges = state.flatMap(edgeBands(_, depth)).persist(StorageLevel.MEMORY_AND_DISK)
+    edges.count()
+    edges
+  }
+
+  /** Drops blocks eagerly. `RDD.unpersist` would log a WARN per call for a
+    * locally checkpointed RDD; its lineage is truncated on purpose here.
+    */
+  private def release(rdds: RDD[_]*): Unit =
+    rdds.foreach(r => InternalBridge.unpersistRDD(r.sparkContext, r.id))
+
   def solve(spark: SparkSession, n: Int, numBlocks: Int = 0,
             maxIterations: Int = Int.MaxValue, stepK: Int = 16): Laplace.Result = {
-    val requested = if (numBlocks > 0) numBlocks else spark.sparkContext.defaultParallelism
+    val sc = spark.sparkContext
+    val requested = if (numBlocks > 0) numBlocks else sc.defaultParallelism
     val layout = BlockLayout(n, math.max(1, math.min(requested, n)))
     val om = Laplace.omega(n)
     val eps = Laplace.epsilon(n)
+    // every superstep runs at most stepK iterations, so needs ghosts at
+    // most 2*stepK rows deep
+    val depth = math.min(2L * stepK, n.toLong).toInt
 
-    var state = initialState(spark, layout)
-    state.localCheckpoint()
-    state.count()
+    def superstep(state: RDD[RowBand], edges: RDD[RowBand], kk: Int, at: Int,
+        name: String): (RDD[RowBand], RDD[RowBand], Array[Double]) = {
+      val acc = new MaxVecAccumulator(kk)
+      sc.register(acc, s"$name@$at")
+      val next = new SuperstepRDD(state, edges, layout, kk, om, acc)
+      val nextEdges = materialize(next, depth)
+      (next, nextEdges, acc.value)
+    }
+
+    var state = initialState(sc, layout)
+    var edges = materialize(state, depth)
     var iterations = 0
     var maxDiff = 0.0
     var converged = false
     val history = Seq.newBuilder[Double]
     while (!converged && iterations < maxIterations) {
       val kk = math.min(stepK.toLong, maxIterations.toLong - iterations).toInt
-      val acc = new MaxVecAccumulator(kk)
-      spark.sparkContext.register(acc, s"laplaceMaxDiff@$iterations")
-      val next = superstep(state, layout, kk, om, acc)
-      next.localCheckpoint()
-      next.count()
-      val maxes = acc.value
+      val (next, nextEdges, maxes) = superstep(state, edges, kk, iterations, "laplaceMaxDiff")
       val idx = maxes.indexWhere(_ <= eps)
       if (idx < 0 || idx == kk - 1) {
-        state.unpersist(blocking = false)
-        state = next; iterations += kk
+        release(state, edges)
+        state = next; edges = nextEdges; iterations += kk
         history ++= maxes
         maxDiff = maxes(kk - 1); converged = idx >= 0
       } else {
         // converged mid-superstep: redo exactly idx+1 iterations so the
         // materialized grid is the state right after the converging
         // iteration (the reference stops there: `laplace-seq.c:209`)
-        next.unpersist(blocking = false)
+        release(next, nextEdges)
         val kk2 = idx + 1
-        val acc2 = new MaxVecAccumulator(kk2)
-        spark.sparkContext.register(acc2, s"laplaceMaxDiffTail@$iterations")
-        val tail = superstep(state, layout, kk2, om, acc2)
-        tail.localCheckpoint()
-        tail.count()
-        state.unpersist(blocking = false)
-        state = tail
-        iterations += kk2; history ++= acc2.value
-        maxDiff = acc2.value(kk2 - 1); converged = true
+        val (tail, tailEdges, tailMaxes) =
+          superstep(state, edges, kk2, iterations, "laplaceMaxDiffTail")
+        release(state, edges)
+        state = tail; edges = tailEdges
+        iterations += kk2; history ++= tailMaxes
+        maxDiff = tailMaxes(kk2 - 1); converged = true
       }
     }
+    release(edges)
     import spark.implicits._
-    Laplace.Result(toCells(spark.createDataset(state.values)), iterations, maxDiff,
-      history.result())
+    val rows = state.flatMap(b => b.rows.iterator.zipWithIndex.map { case (v, r) => GridRow(b.lo + r, v) })
+    Laplace.Result(toCells(spark.createDataset(rows)), iterations, maxDiff, history.result())
   }
 
   /** Flatten GridRow back to the canonical (i, j, v) cell table. */

@@ -1,13 +1,15 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.types.StructType
 
-/** The one `private[sql]` door the engine needs: building a DataFrame
-  * directly over an `RDD[InternalRow]`.
+/** The internal-API doors the engine needs: building a DataFrame
+  * directly over an `RDD[InternalRow]`, and dropping an RDD's cached
+  * blocks by id.
   *
   * `Prefix.orderStats` hands corpus-sized data through an RDD scan pass
   * (genuine per-partition imperative logic — the two-pass prefix scan).
@@ -19,8 +21,8 @@ import org.apache.spark.sql.types.StructType
   * rewritten surface. `SparkSession.internalCreateDataFrame` skips both
   * but is `private[sql]`, hence this shim package — the standard
   * connector-library spelling (spark-avro and the Hive integration do
-  * the same). Confined to exactly one method so the internal-API
-  * surface stays auditable.
+  * the same). Confined to two methods so the internal-API surface stays
+  * auditable.
   */
 object InternalBridge {
 
@@ -35,4 +37,14 @@ object InternalBridge {
       rdd: RDD[InternalRow],
       schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** `sc.unpersistRDD(rddId, blocking = false)`: what `RDD.unpersist`
+    * does, minus its WARN for a locally checkpointed RDD ("its lineage has
+    * been truncated"). `BlockSolver` drops every superseded superstep this
+    * way, eagerly rather than through the `ContextCleaner`; their lineage
+    * is truncated on purpose, so the warning would be one line of noise
+    * per superstep.
+    */
+  def unpersistRDD(sc: SparkContext, rddId: Int): Unit =
+    sc.unpersistRDD(rddId, blocking = false)
 }

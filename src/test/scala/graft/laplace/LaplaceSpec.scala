@@ -12,8 +12,9 @@ class LaplaceSpec extends SparkSpec {
   private def cellsOf(res: Laplace.Result): Map[(Int, Int), Double] =
     res.grid.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
 
-  private def checkAgainstOracle(n: Int, res: Laplace.Result): Unit = {
-    val oracle = ScalarOracle.solve(n)
+  private def checkAgainstOracle(n: Int, res: Laplace.Result,
+      maxIterations: Int = Int.MaxValue): Unit = {
+    val oracle = ScalarOracle.solve(n, maxIterations)
     assert(res.iterations === oracle.iterations, s"N=$n iterations")
     assert(res.finalDiff === oracle.finalDiff, s"N=$n finalDiff (exact)")
     val got = cellsOf(res)
@@ -56,6 +57,23 @@ class LaplaceSpec extends SparkSpec {
     checkAgainstOracle(5, BlockSolver.solve(spark, 5, numBlocks = 4))
   }
 
+  test("multi-hop ghosts over several supersteps and a tail (N=24, 6 blocks)") {
+    // blocks of 4 rows under ghost zones 8 (k=4) and 14 (k=7) rows deep:
+    // each block reads edge bands from two and four blocks on each side.
+    // N=24 converges after 240 iterations, a multiple of 4, so only k=7
+    // ends in a mid-superstep tail redo
+    checkAgainstOracle(24, BlockSolver.solve(spark, 24, numBlocks = 6, stepK = 4))
+    val res = BlockSolver.solve(spark, 24, numBlocks = 6, stepK = 7)
+    assert(res.iterations > 2 * 7 && res.iterations % 7 != 0,
+      s"${res.iterations} iterations: want several full supersteps plus a tail")
+    checkAgainstOracle(24, res)
+  }
+
+  test("iteration cap: a full superstep then a capped one (N=16, 20 iterations, k=16)") {
+    checkAgainstOracle(16, BlockSolver.solve(spark, 16, numBlocks = 4,
+      maxIterations = 20, stepK = 16), maxIterations = 20)
+  }
+
   test("golden N=16: block solver, partition-count invariant") {
     val r1 = BlockSolver.solve(spark, 16, numBlocks = 1)
     val r4 = BlockSolver.solve(spark, 16, numBlocks = 4)
@@ -95,37 +113,60 @@ class LaplaceSpec extends SparkSpec {
       assert(lay.hi(blocks - 1) === n - 1)
       for (b <- 0 until blocks; i <- lay.lo(b) to lay.hi(b))
         assert(lay.blockOf(i) === b, s"n=$n blocks=$blocks i=$i")
-      // ghost routing: block d receives row i iff i is within `ghost`
-      // rows of d's range — including across several thin blocks
-      for (ghost <- Seq(1, 2, 32); i <- 0 until n; d <- 0 until blocks) {
-        val needs = i >= lay.lo(d) - ghost && i <= lay.hi(d) + ghost
-        assert(lay.ghostDests(i, ghost).contains(d) === needs,
-          s"n=$n blocks=$blocks ghost=$ghost i=$i d=$d")
+      // ghost routing: block d reads from block c iff some row of c is
+      // within `ghost` rows of d's range — including across thin blocks
+      for (ghost <- Seq(1, 2, 32); d <- 0 until blocks; c <- 0 until blocks) {
+        val needs = (lay.lo(c) to lay.hi(c)).exists(i =>
+          i >= lay.lo(d) - ghost && i <= lay.hi(d) + ghost)
+        assert(lay.haloBlocks(d, ghost).contains(c) === needs,
+          s"n=$n blocks=$blocks ghost=$ghost d=$d c=$c")
       }
     }
   }
 
-  test("superstep halo is shuffle-routed: one job per superstep, no driver collect") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+  test("solve writes no shuffle: one stage per job, one job per superstep") {
+    import org.apache.spark.scheduler._
+    val fence = "laplace-spec-fence"
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val stagesRun = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
+    // the bus delivers events in order, so everything solve() posted has
+    // been seen once the fence job (started after solve returns) arrives
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (fenced.getCount > 0) {
+          if (s.properties != null &&
+              s.properties.getProperty("spark.job.description") == fence)
+            fenced.countDown()
+          else stagesPerJob.add(s.stageInfos.size)
+        }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        if (fenced.getCount > 0) stagesRun.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (fenced.getCount > 0 && e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten +
+            e.taskMetrics.shuffleReadMetrics.totalBytesRead)
     }
-    spark.sparkContext.addSparkListener(listener)
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
     try {
-      val res = BlockSolver.solve(spark, 16, numBlocks = 4, stepK = 16)
-      // listener events are async; jobs have all STARTED by the time
-      // solve() returns (each superstep's job is awaited), but give the
-      // bus a beat to drain
-      Thread.sleep(500)
-      val supersteps = (res.iterations + 15) / 16
+      // blocks of 4 rows under an 8-row ghost zone: halos two blocks deep
+      val res = BlockSolver.solve(spark, 16, numBlocks = 4, stepK = 4)
+      sc.setJobDescription(fence)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      val supersteps = (res.iterations + 3) / 4
+      val jobs = stagesPerJob.size
+      assert(shuffleBytes.get === 0L, "the halo must not go through a shuffle")
+      assert(stagesPerJob.toArray.forall(_ == 1), s"stages per job: $stagesPerJob")
+      assert(stagesRun.get === jobs)
       // init materialization + one job per superstep + at most one
-      // mid-superstep tail redo; the old driver-routed halo ran an extra
-      // collect job per superstep and would blow this bound
-      assert(jobs.get <= supersteps + 3,
-        s"${jobs.get} jobs for $supersteps supersteps — halo collect crept back in")
+      // mid-superstep tail redo; a driver-routed halo would add a collect
+      // job per superstep and blow this bound
+      assert(jobs <= supersteps + 3, s"$jobs jobs for $supersteps supersteps")
       checkAgainstOracle(16, res)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("single color-0 half-sweep touches only (i+j) even interior cells (N=6)") {
