@@ -220,25 +220,15 @@ object Bench {
     * all-pairs, bytes would grow ~100x per 10x step.
     */
   /** Run `build(dir).count()` once warm then once metered, reporting wall
-    * seconds + shuffle-write MB per fixture scale (listener-measured).
+    * seconds + shuffle-write MB per fixture scale (measured by [[JobTrace]]).
     */
   private def scaleLadder(spark: SparkSession)(
       build: String => org.apache.spark.sql.DataFrame): Seq[String] =
     Seq("sf0.001", "sf0.01", "sf0.1").map { sf =>
       val dir = s"/root/testdata/$sf"
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
       build(dir).count() // warm (plan/codegen), unmetered
-      spark.sparkContext.addSparkListener(listener)
-      val sec = time(build(dir).count())
-      Thread.sleep(1000) // listener bus drains asynchronously
-      spark.sparkContext.removeSparkListener(listener)
-      s""""$sf":{"sec":$sec,"shuffle_mb":${shuffleBytes.get / 1e6}}"""
+      val (sec, trace) = JobTrace.run(spark.sparkContext)(time(build(dir).count()))
+      s""""$sf":{"sec":$sec,"shuffle_mb":${trace.shuffleWriteBytes / 1e6}}"""
     }
 
   private def pipelineWitness(spark: SparkSession): String = {
@@ -325,25 +315,15 @@ object Bench {
         .write.mode("overwrite").parquet(s"$tmp/$arm$n")
       val ev = spark.read.parquet(s"$tmp/$arm$n")
         .withColumn("nrm", sqrt(expr(graft.operators.Ns.dot("v", "v"))))
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
       // timed action: build + materialize (localCheckpoint), so the
       // recall pin below can REUSE the built lists instead of paying
       // the minutes-long 50k build twice; materializing n*3 id pairs
       // adds negligible wall over the count() this replaces
       var blocked: org.apache.spark.sql.DataFrame = null
-      val sec = time {
+      val (sec, trace) = JobTrace.run(spark.sparkContext)(time {
         blocked = graft.operators.Graph.knnDirectedBlockedOn(spark, ev, h, 2)
           .localCheckpoint()
-      }
-      Thread.sleep(1000) // listener bus drains asynchronously
-      spark.sparkContext.removeSparkListener(listener)
+      })
       // recall@3 vs the exact arm on the fixed Ns.SampleK query budget
       // (the g19 recipe: 64 smallest-md5-rank ids broadcast against the
       // corpus — O(K·n)) — QUALITY at synthetic scale, not just cost;
@@ -368,7 +348,7 @@ object Bench {
       val hits = blocked.join(exact, Seq("qid", "nb"), "left_semi").count()
       val tot = exact.count()
       val recallPpm = if (tot == 0) 0L else hits * 1000000L / tot
-      s""""n$n":{"h":$h,"sec":$sec,"shuffle_mb":${shuffleBytes.get / 1e6},"recall_ppm":$recallPpm}"""
+      s""""n$n":{"h":$h,"sec":$sec,"shuffle_mb":${trace.shuffleWriteBytes / 1e6},"recall_ppm":$recallPpm}"""
     }
     s""""$arm":{${entries.mkString(",")}}"""
     }
@@ -433,7 +413,7 @@ object Bench {
   /** Large-N solver witness: the temporal-blocking design claims argued in
     * BlockSolver.scala, measured at a size where compute dominates
     * scheduling (N=512: 262144 cells, ~16k iterations to convergence).
-    * Timed ONCE (not median-of-3 — the convergence run is ~100 s and its
+    * Timed ONCE (not median-of-3 — the convergence run is ~50 s and its
     * thousands of jobs self-average). Reports:
     *  - the convergence run (supersteps, cells*iterations/sec),
     *  - per-iteration rates of the block path (96 iters = 6 supersteps)
@@ -448,29 +428,13 @@ object Bench {
     val blocks = 32
     val stepK = 16
     val cells = n.toLong * n
-    // jobs and stages of the solve itself (tagged by job group, so the
-    // grid count after it stays out); events drain async — small sleep
-    val group = "solver-witness"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    def inSolve(p: java.util.Properties): Boolean =
-      p != null && p.getProperty("spark.jobGroup.id") == group
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (inSolve(s.properties)) jobs.incrementAndGet()
-      override def onStageSubmitted(
-          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (inSolve(s.properties)) stages.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    // jobs and stages of the solve itself; the grid count after it is
+    // timed but not traced
     val t0 = System.nanoTime()
-    spark.sparkContext.setJobGroup(group, group)
-    val r = try graft.laplace.BlockSolver.solve(spark, n, numBlocks = blocks)
-      finally spark.sparkContext.clearJobGroup()
+    val (r, trace) = JobTrace.run(spark.sparkContext)(
+      graft.laplace.BlockSolver.solve(spark, n, numBlocks = blocks))
     r.grid.count()
     val convSec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(2000) // listener bus drains asynchronously
-    spark.sparkContext.removeSparkListener(listener)
     val supersteps = (r.iterations + stepK - 1) / stepK
     val tb0 = System.nanoTime()
     graft.laplace.BlockSolver.solve(spark, n, numBlocks = blocks, maxIterations = 96).grid.count()
@@ -482,6 +446,6 @@ object Bench {
       s""""supersteps":$supersteps,"cells_iters_per_sec":${(cells * r.iterations / convSec).toLong},""" +
       s""""block_sec_per_iter":$blockSecPerIter,"cell_sec_per_iter":$cellSecPerIter,""" +
       s""""temporal_blocking_speedup":${cellSecPerIter / blockSecPerIter},""" +
-      s""""solve_jobs":${jobs.get},"stages_per_superstep":${stages.get.toDouble / jobs.get}}"""
+      s""""solve_jobs":${trace.jobs},"stages_per_superstep":${trace.stagesSubmitted.toDouble / trace.jobs}}"""
   }
 }

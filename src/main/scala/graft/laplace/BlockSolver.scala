@@ -1,20 +1,11 @@
 package graft.laplace
 
+import graft.operators.Iterate
 import org.apache.spark.{NarrowDependency, OneToOneDependency, Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.InternalBridge
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.AccumulatorV2
-
-/** One grid row: row index + all N cell values. The performance
-  * representation from SURVEY.md §1.4 — mirrors the reference's 1-D
-  * block-row partitioning (`laplace-par.c:245-251`) so the 5-point
-  * stencil's east/west neighbors are intra-row array reads and only
-  * north/south cross rows.
-  */
-final case class GridRow(i: Int, vals: Array[Double])
 
 /** Elementwise-max accumulator over a fixed-length vector: slot t holds
   * the global max |diff| of iteration t within a superstep — the
@@ -67,7 +58,11 @@ final case class BlockLayout(n: Int, blocks: Int) {
 }
 
 /** A contiguous run of grid rows starting at row `lo`: a whole block of
-  * the solver state, or one edge band of a block.
+  * the solver state, or one edge band of a block. The performance
+  * representation from SURVEY.md §1.4 — mirrors the reference's 1-D
+  * block-row partitioning (`laplace-par.c:245-251`) so the 5-point
+  * stencil's east/west neighbors are intra-row array reads and only
+  * north/south cross rows.
   */
 private[laplace] final case class RowBand(lo: Int, rows: Array[Array[Double]]) {
   def hi: Int = lo + rows.length - 1
@@ -104,10 +99,16 @@ private final class SuperstepRDD(
     extends RDD[RowBand](state.context,
       Seq(new OneToOneDependency(state), new HaloDependency(edges, layout, 2 * kk))) {
 
+  // `edges` maps `state` one-to-one, so the edge partitions are the
+  // state's. Taken from the checkpointed state, not from `edges`, which
+  // keeps the partitions it saw before the checkpoint: superstep partitions
+  // naming the previous edge partitions, a chain back to the first
+  // superstep that every task would carry (a StackOverflowError in task
+  // serialization after about a thousand supersteps).
   override protected def getPartitions: Array[Partition] = {
     val halo = dependencies(1).asInstanceOf[HaloDependency]
     state.partitions.map(p =>
-      new SuperstepPartition(p.index, p, halo.getParents(p.index).map(edges.partitions).toArray))
+      new SuperstepPartition(p.index, p, halo.getParents(p.index).map(state.partitions).toArray))
   }
 
   override def compute(split: Partition, ctx: TaskContext): Iterator[RowBand] = {
@@ -266,14 +267,13 @@ object BlockSolver {
     edges
   }
 
-  /** Drops blocks eagerly. `RDD.unpersist` would log a WARN per call for a
-    * locally checkpointed RDD; its lineage is truncated on purpose here.
-    */
-  private def release(rdds: RDD[_]*): Unit =
-    rdds.foreach(r => InternalBridge.unpersistRDD(r.sparkContext, r.id))
-
   def solve(spark: SparkSession, n: Int, numBlocks: Int = 0,
             maxIterations: Int = Int.MaxValue, stepK: Int = 16): Laplace.Result = {
+    // the reference rejects N < 2 (`laplace-seq.c:154-161`)
+    require(n >= 2, s"n must be >= 2, got $n")
+    require(stepK >= 1, s"stepK must be >= 1, got $stepK")
+    require(numBlocks >= 0, s"numBlocks must be >= 0, got $numBlocks")
+    require(maxIterations >= 0, s"maxIterations must be >= 0, got $maxIterations")
     val sc = spark.sparkContext
     val requested = if (numBlocks > 0) numBlocks else sc.defaultParallelism
     val layout = BlockLayout(n, math.max(1, math.min(requested, n)))
@@ -303,7 +303,7 @@ object BlockSolver {
       val (next, nextEdges, maxes) = superstep(state, edges, kk, iterations, "laplaceMaxDiff")
       val idx = maxes.indexWhere(_ <= eps)
       if (idx < 0 || idx == kk - 1) {
-        release(state, edges)
+        Iterate.releaseRDD(state); Iterate.releaseRDD(edges)
         state = next; edges = nextEdges; iterations += kk
         history ++= maxes
         maxDiff = maxes(kk - 1); converged = idx >= 0
@@ -311,27 +311,23 @@ object BlockSolver {
         // converged mid-superstep: redo exactly idx+1 iterations so the
         // materialized grid is the state right after the converging
         // iteration (the reference stops there: `laplace-seq.c:209`)
-        release(next, nextEdges)
+        Iterate.releaseRDD(next); Iterate.releaseRDD(nextEdges)
         val kk2 = idx + 1
         val (tail, tailEdges, tailMaxes) =
           superstep(state, edges, kk2, iterations, "laplaceMaxDiffTail")
-        release(state, edges)
+        Iterate.releaseRDD(state); Iterate.releaseRDD(edges)
         state = tail; edges = tailEdges
         iterations += kk2; history ++= tailMaxes
         maxDiff = tailMaxes(kk2 - 1); converged = true
       }
     }
-    release(edges)
+    Iterate.releaseRDD(edges)
     import spark.implicits._
-    val rows = state.flatMap(b => b.rows.iterator.zipWithIndex.map { case (v, r) => GridRow(b.lo + r, v) })
-    Laplace.Result(toCells(spark.createDataset(rows)), iterations, maxDiff, history.result())
-  }
-
-  /** Flatten GridRow back to the canonical (i, j, v) cell table. */
-  def toCells(ds: Dataset[GridRow]): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.flatMap(r => r.vals.iterator.zipWithIndex.map { case (v, j) => (r.i, j, v) })
-      .toDF("i", "j", "v")
-      .select(col("i"), col("j"), col("v"))
+    // the canonical (i, j, v) cell table, straight from the blocks
+    val cells = state.flatMap(b =>
+      for (r <- b.rows.indices.iterator; j <- b.rows(r).indices.iterator)
+        yield (b.lo + r, j, b.rows(r)(j)))
+    Laplace.Result(spark.createDataset(cells).toDF("i", "j", "v"), iterations, maxDiff,
+      history.result())
   }
 }

@@ -71,18 +71,13 @@ object Dedup {
   // keeps the SessRefs themselves reachable until their session dies
   private val sessRefs =
     new java.util.concurrent.ConcurrentHashMap[String, SessRef]
-  private def unpersistAncestors(r: org.apache.spark.rdd.RDD[_]): Unit =
-    try {
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        r.unpersist(blocking = false)
-      else r.dependencies.foreach(dep => unpersistAncestors(dep.rdd))
-    } catch { case _: Throwable => () } // context may already be stopped
   private def evictSession(id: String): Unit = {
     val it = sharedMemo.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey.startsWith(id + "|")) {
-        unpersistAncestors(e.getValue._2)
+        try Iterate.releaseRDD(e.getValue._2)
+        catch { case _: Throwable => () } // context may already be stopped
         it.remove()
       }
     }

@@ -377,8 +377,7 @@ object Graph {
     * enumerate wedges only among each center's OUT-neighbors — each
     * triangle found exactly ONCE — and credit its three edges with an
     * explode + partial-agg count. On a near-clique graph the wedge join
-    * shrinks ~3x vs the undirected spelling. Shared by g15's peel loop
-    * and the TrussProbe breakdown tool.
+    * shrinks ~3x vs the undirected spelling. Used by g15's peel loop.
     */
   private[graft] def trussSupportOf(live: DataFrame): DataFrame = {
     val deg = live.select(col("a").as("n")).unionAll(live.select(col("b").as("n")))

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.InternalBridge
 
 /** Helpers for DataFrame fixpoint loops (d06 / g06 / c03 style). */
 object Iterate {
@@ -59,8 +61,7 @@ object Iterate {
       r.copy()
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     mapped.count() // the one materialization job
-    (org.apache.spark.sql.graft.InternalBridge.internalCreateDataFrame(
-      spark, mapped, df.schema), acc.value)
+    (InternalBridge.internalCreateDataFrame(spark, mapped, df.schema), acc.value)
   }
 
   /** [[checkpointFresh]] fused with an exact ROW count: materializes `df`
@@ -77,8 +78,7 @@ object Iterate {
     val mapped = df.queryExecution.toRdd.map(_.copy())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = mapped.count() // the one materialization job
-    (org.apache.spark.sql.graft.InternalBridge.internalCreateDataFrame(
-      spark, mapped, df.schema), n)
+    (InternalBridge.internalCreateDataFrame(spark, mapped, df.schema), n)
   }
 
   /** Unpersist the checkpoint blocks behind a SUPERSEDED loop state.
@@ -95,67 +95,47 @@ object Iterate {
     * Works on both checkpoint spellings: a plain `localCheckpoint` result
     * (LogicalRDD over the persisted internal RDD) and a
     * [[checkpointFresh]] result (LogicalRDD over a row-conversion RDD a
-    * few narrow dependencies above the persisted one) — it walks the RDD
-    * dependency chain to the first persisted ancestor. A non-RDD-backed
-    * plan is a no-op, so calling it on a never-checkpointed frame is safe.
-    */
-  // Unpersisting a locally-checkpointed RDD makes Spark WARN that its
-  // truncated lineage "cannot be recomputed" — which is the POINT here
-  // (superseded loop state is never reread). Silence EXACTLY that
-  // message with a log4j2 filter on the emitting logger; every other
-  // WARN from that class (and everything else) stays visible — the r8
-  // spelling raised the whole class logger to ERROR, muting unrelated
-  // warnings process-wide.
-  private lazy val quietUnpersistWarn: Unit =
-    try {
-      import org.apache.logging.log4j.core.LoggerContext
-      import org.apache.logging.log4j.core.config.LoggerConfig
-      val ctx = org.apache.logging.log4j.LogManager
-        .getContext(false).asInstanceOf[LoggerContext]
-      val cfg = ctx.getConfiguration
-      val name = "org.apache.spark.rdd.MapPartitionsRDD"
-      val lc = cfg.getLoggerConfig(name) match {
-        case exact if exact.getName == name => exact
-        case parent =>
-          val nc = new LoggerConfig(name, parent.getLevel, true)
-          cfg.addLogger(name, nc)
-          nc
-      }
-      lc.addFilter(new org.apache.logging.log4j.core.filter.AbstractFilter() {
-        override def filter(event: org.apache.logging.log4j.core.LogEvent)
-            : org.apache.logging.log4j.core.Filter.Result = {
-          val msg = if (event.getMessage == null) null
-            else event.getMessage.getFormattedMessage
-          if (msg != null && msg.contains("cannot be recomputed after unpersisting"))
-            org.apache.logging.log4j.core.Filter.Result.DENY
-          else org.apache.logging.log4j.core.Filter.Result.NEUTRAL
-        }
-      })
-      ctx.updateLoggers()
-    } catch { case _: Throwable => () }
-
-  /** True when at least one persisted ancestor block set was released —
+    * few narrow dependencies above the persisted one) — [[releaseRDD]]
+    * walks each leaf's dependency chain to the first persisted ancestor.
+    * A non-RDD-backed plan is a no-op, so calling it on a never-
+    * checkpointed frame is safe.
+    *
+    * True when at least one persisted ancestor block set was released —
     * exposed so loops (and Round8OpsSpec) can ASSERT the release took,
     * instead of the call failing open.
     */
   def release(df: DataFrame): Boolean = {
-    quietUnpersistWarn
-    var released = false
-    def walk(r: org.apache.spark.rdd.RDD[_]): Unit =
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-        r.unpersist(blocking = false)
-        released = true
-      } else r.dependencies.foreach(dep => walk(dep.rdd))
     // collect EVERY RDD-backed leaf (handles a .select/.filter layered
     // over the checkpoint — the r8 spelling matched only a BARE
     // LogicalRDD root and silently no-opped otherwise)
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l
-    }.foreach(l => walk(l.rdd))
+    val released = df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => releaseRDD(l.rdd)
+    }.contains(true)
     if (!released)
       org.apache.logging.log4j.LogManager.getLogger("graft.operators.Iterate")
         .warn("Iterate.release: no persisted ancestor found — the frame was " +
           "not checkpointed (or already released); checkpoint blocks may leak")
     released
+  }
+
+  /** Drops the blocks of the first persisted ancestor of `rdd` (itself
+    * included) on every dependency path; true when any were dropped.
+    *
+    * The one block-release path of the library: loop state, session
+    * memos and superseded solver supersteps all go through it. "Persisted"
+    * means registered in `getPersistentRDDs` — `sc.unpersistRDD` leaves
+    * an RDD's storage level set, so a second call finds nothing.
+    * Releasing through [[InternalBridge.unpersistRDD]] rather than
+    * `RDD.unpersist` skips the WARN the latter logs for a locally
+    * checkpointed RDD, whose lineage is truncated on purpose here.
+    */
+  private[graft] def releaseRDD(rdd: RDD[_]): Boolean = {
+    val persisted = rdd.sparkContext.getPersistentRDDs
+    def walk(r: RDD[_]): Boolean =
+      if (persisted.contains(r.id)) {
+        InternalBridge.unpersistRDD(r.sparkContext, r.id)
+        true
+      } else r.dependencies.map(dep => walk(dep.rdd)).contains(true)
+    walk(rdd)
   }
 }

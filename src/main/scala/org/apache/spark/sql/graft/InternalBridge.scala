@@ -40,10 +40,10 @@ object InternalBridge {
 
   /** `sc.unpersistRDD(rddId, blocking = false)`: what `RDD.unpersist`
     * does, minus its WARN for a locally checkpointed RDD ("its lineage has
-    * been truncated"). `BlockSolver` drops every superseded superstep this
-    * way, eagerly rather than through the `ContextCleaner`; their lineage
-    * is truncated on purpose, so the warning would be one line of noise
-    * per superstep.
+    * been truncated"). Called only by `graft.operators.Iterate.releaseRDD`,
+    * which drops superseded loop state, memos and solver supersteps
+    * eagerly rather than through the `ContextCleaner`; their lineage is
+    * truncated on purpose, so the warning would be noise.
     */
   def unpersistRDD(sc: SparkContext, rddId: Int): Unit =
     sc.unpersistRDD(rddId, blocking = false)

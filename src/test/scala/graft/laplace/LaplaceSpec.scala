@@ -45,6 +45,9 @@ class LaplaceSpec extends SparkSpec {
     assert(res.iterations === 1)
     assert(res.finalDiff === 0.0)
     checkAgainstOracle(2, res)
+    import org.apache.spark.sql.types._
+    assert(res.grid.schema === StructType(Seq(StructField("i", IntegerType, nullable = false),
+      StructField("j", IntegerType, nullable = false), StructField("v", DoubleType, nullable = false))))
   }
 
   test("cell solver matches scalar oracle bit-for-bit (N=3,4,5)") {
@@ -72,6 +75,22 @@ class LaplaceSpec extends SparkSpec {
   test("iteration cap: a full superstep then a capped one (N=16, 20 iterations, k=16)") {
     checkAgainstOracle(16, BlockSolver.solve(spark, 16, numBlocks = 4,
       maxIterations = 20, stepK = 16), maxIterations = 20)
+  }
+
+  test("1500 supersteps stay bit-exact (N=128, 2 blocks, k=1, 1500 iterations)") {
+    // superstep partitions once named the previous superstep's, so every
+    // task carried a chain back to the first superstep and task
+    // (de)serialization overflowed the stack after about a thousand. An
+    // overflow on the driver leaves the job hanging, hence the time limit
+    import scala.concurrent.{Await, Future, TimeoutException}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val solve = Future(BlockSolver.solve(spark, 128, numBlocks = 2,
+      maxIterations = 1500, stepK = 1))
+    val res = try Await.result(solve, 300.seconds) catch {
+      case e: TimeoutException => spark.sparkContext.cancelAllJobs(); throw e
+    }
+    checkAgainstOracle(128, res, maxIterations = 1500)
   }
 
   test("golden N=16: block solver, partition-count invariant") {
@@ -125,48 +144,32 @@ class LaplaceSpec extends SparkSpec {
   }
 
   test("solve writes no shuffle: one stage per job, one job per superstep") {
-    import org.apache.spark.scheduler._
-    val fence = "laplace-spec-fence"
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]
-    val stagesRun = new java.util.concurrent.atomic.AtomicInteger(0)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    // the bus delivers events in order, so everything solve() posted has
-    // been seen once the fence job (started after solve returns) arrives
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        if (fenced.getCount > 0) {
-          if (s.properties != null &&
-              s.properties.getProperty("spark.job.description") == fence)
-            fenced.countDown()
-          else stagesPerJob.add(s.stageInfos.size)
-        }
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        if (fenced.getCount > 0) stagesRun.incrementAndGet()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (fenced.getCount > 0 && e.taskMetrics != null)
-          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten +
-            e.taskMetrics.shuffleReadMetrics.totalBytesRead)
+    // blocks of 4 rows under an 8-row ghost zone: halos two blocks deep
+    val (res, trace) = graft.JobTrace.run(spark.sparkContext)(
+      BlockSolver.solve(spark, 16, numBlocks = 4, stepK = 4))
+    val supersteps = (res.iterations + 3) / 4
+    assert(trace.shuffleWriteBytes + trace.shuffleReadBytes === 0L,
+      "the halo must not go through a shuffle")
+    assert(trace.stagesPerJob.forall(_ == 1), s"stages per job: ${trace.stagesPerJob}")
+    assert(trace.stagesSubmitted === trace.jobs)
+    // init materialization + one job per superstep + at most one
+    // mid-superstep tail redo; a driver-routed halo would add a collect
+    // job per superstep and blow this bound
+    assert(trace.jobs <= supersteps + 3, s"${trace.jobs} jobs for $supersteps supersteps")
+    checkAgainstOracle(16, res)
+  }
+
+  test("bad solver arguments fail fast, naming the argument") {
+    for ((arg, solve) <- Seq[(String, () => Laplace.Result)](
+        "n" -> (() => BlockSolver.solve(spark, 1)),
+        "n" -> (() => BlockSolver.solve(spark, 0)),
+        "stepK" -> (() => BlockSolver.solve(spark, 8, stepK = 0)),
+        "stepK" -> (() => BlockSolver.solve(spark, 8, stepK = -3)),
+        "numBlocks" -> (() => BlockSolver.solve(spark, 8, numBlocks = -1)),
+        "maxIterations" -> (() => BlockSolver.solve(spark, 8, maxIterations = -1)))) {
+      val e = intercept[IllegalArgumentException](solve())
+      assert(e.getMessage.contains(s"$arg must be"), e.getMessage)
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      // blocks of 4 rows under an 8-row ghost zone: halos two blocks deep
-      val res = BlockSolver.solve(spark, 16, numBlocks = 4, stepK = 4)
-      sc.setJobDescription(fence)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
-      val supersteps = (res.iterations + 3) / 4
-      val jobs = stagesPerJob.size
-      assert(shuffleBytes.get === 0L, "the halo must not go through a shuffle")
-      assert(stagesPerJob.toArray.forall(_ == 1), s"stages per job: $stagesPerJob")
-      assert(stagesRun.get === jobs)
-      // init materialization + one job per superstep + at most one
-      // mid-superstep tail redo; a driver-routed halo would add a collect
-      // job per superstep and blow this bound
-      assert(jobs <= supersteps + 3, s"$jobs jobs for $supersteps supersteps")
-      checkAgainstOracle(16, res)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("single color-0 half-sweep touches only (i+j) even interior cells (N=6)") {

@@ -32,6 +32,20 @@ class Round8OpsSpec extends SparkSpec {
         "- superseded loop checkpoints are not being released")
   }
 
+  test("Iterate.release drops a local checkpoint once, then reports nothing left") {
+    // persistence is read from getPersistentRDDs: the release leaves the
+    // RDD's storage level set, so a storage-level test would claim a
+    // second release too
+    val ck = spark.range(1000).toDF("id").localCheckpoint()
+    val id = ck.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.get
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    assert(Iterate.release(ck.select("id")), "first release found no checkpoint")
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id))
+    assert(!Iterate.release(ck), "second release claimed blocks already dropped")
+  }
+
   test("d19: leakage card equals a scalar replay from the d02 pairs; shard dim leaks hardest") {
     // ground pairs: the oracle-pinned d02 surface, thresholded like d19
     val pairs = graft.SparkEntry.queries("d02_minhash_lsh")(spark, sf0001)

@@ -1,10 +1,10 @@
-package graft
+package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Generates docs/DSV2_PUSHDOWN.md: the GridSource DataSource-V2 pushdown
   * matrix, each row witnessed by the LIVE physical plan (not hand-claimed).
-  * Run after any sources/ change: `sbt "runMain graft.DumpPushdown"`.
+  * Run after any sources/ change: `sbt "Test/runMain graft.tools.DumpPushdown"`.
   */
 object DumpPushdown {
   def main(args: Array[String]): Unit = {
@@ -32,7 +32,7 @@ object DumpPushdown {
     }
 
     val sb = new StringBuilder
-    sb.append("# GridSource DSv2 pushdown matrix (generated by graft.DumpPushdown)\n\n")
+    sb.append("# GridSource DSv2 pushdown matrix (generated by graft.tools.DumpPushdown)\n\n")
     sb.append("| Capability | DSv2 interface | Effect at scale |\n")
     sb.append("| --- | --- | --- |\n")
     sb.append("| Column pruning | `SupportsPushDownRequiredColumns` | a `SELECT v` scan materializes 1 of 3 columns |\n")

@@ -1,4 +1,5 @@
-package graft
+package graft.tools
+import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 
 /** Dev utility for the optimization rounds: dump `.explain("formatted")`
@@ -9,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * query first so AQE's final plan (not the initial one) is what lands
   * in the file.
   *
-  * `sbt "runMain graft.ExplainDump plans/r11 before q103_mad_outliers ..."`
+  * `sbt "Test/runMain graft.tools.ExplainDump plans/r11 before q103_mad_outliers ..."`
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {

@@ -1,10 +1,11 @@
-package graft
+package graft.tools
 
+import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 
 /** Dev utility: time named queries in isolation, 3 runs each, at sf0.1 —
   * separates first-run plan/codegen cost from steady-state execution.
-  * `sbt "runMain graft.TimeQuery c01_kmeans g01_pagerank"`
+  * `sbt "Test/runMain graft.tools.TimeQuery c01_kmeans g01_pagerank"`
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
