@@ -276,9 +276,14 @@ object Bench {
     * witness exists to measure.
     */
   private def knnSynthWitness(spark: SparkSession): String = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_synth")
+    try knnSynthWitness(spark, tmp.toString)
+    finally org.apache.hadoop.fs.FileUtil.fullyDelete(tmp.toFile)
+  }
+
+  private def knnSynthWitness(spark: SparkSession, tmp: String): String = {
     import org.apache.spark.sql.functions._
     graft.operators.Ns.registerFast(spark)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_synth").toString
     // md5-derived U(-0.5, 0.5) component with a seeded tag
     def u01(seed: String): String =
       s"CAST(conv(substr(md5($seed), 1, 8), 16, 10) AS BIGINT) " +

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -210,28 +211,29 @@ case class VecEqCount(left: Expression, right: Expression)
 
 object GraftFunctions {
 
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "vec_dot" -> { exprs => VecDot(exprs(0), exprs(1)) },
-    "vec_l2sq" -> { exprs => VecL2Sq(exprs(0), exprs(1)) },
-    "vec_eq_count" -> { exprs => VecEqCount(exprs(0), exprs(1)) },
-    "char_hist16" -> { exprs => CharHist16(exprs(0)) },
-    "topk_structs" -> { exprs => TopKStructAgg(exprs(0), exprs(1)).toAggregateExpression() },
-    "vec_moments" -> { exprs => DecimalMomentsAgg(exprs(0)).toAggregateExpression() },
+  /** The one function registry, (name, expression class, builder):
+    * [[register]] and [[GraftExtensions]] both install exactly these.
+    */
+  private[functions] val fns: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[VecDot], exprs => VecDot(exprs(0), exprs(1))),
+    ("vec_l2sq", classOf[VecL2Sq], exprs => VecL2Sq(exprs(0), exprs(1))),
+    ("vec_eq_count", classOf[VecEqCount], exprs => VecEqCount(exprs(0), exprs(1))),
+    ("char_hist16", classOf[CharHist16], exprs => CharHist16(exprs(0))),
+    ("topk_structs", classOf[TopKStructAgg], exprs => TopKStructAgg(exprs(0), exprs(1)).toAggregateExpression()),
+    ("vec_moments", classOf[DecimalMomentsAgg], exprs => DecimalMomentsAgg(exprs(0)).toAggregateExpression()),
     // Spark's runtime-filter bloom machinery (InjectRuntimeFilter's
     // BloomFilterAggregate / BloomFilterMightContain) exposed as
     // user-facing functions: build ONCE over xxhash64 keys, persist the
     // ~KB binary sketch, probe any table against it. Not in the public
     // FunctionRegistry as of Spark 4.1 — this surfaces the existing,
     // deterministic (fixed-seed) implementation, no re-implementation.
-    "graft_bloom_agg" -> { exprs =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1), exprs(2)).toAggregateExpression() },
-    "graft_bloom_might_contain" -> { exprs =>
-      BloomFilterMightContain(exprs(0), exprs(1)) },
-    "word_ngrams" -> { exprs => WordNGrams(exprs(0), exprs(1)) },
-    "cdc_chunks" -> { exprs => CdcChunks(exprs(0), exprs(1), exprs(2)) },
-    "ssim_pairs" -> { exprs => SsimPairs(exprs(0)) },
-    "graft_normalize" -> { exprs => NormalizeText(exprs(0), exprs(1)) }
+    ("graft_bloom_agg", classOf[BloomFilterAggregate],
+      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)).toAggregateExpression()),
+    ("graft_bloom_might_contain", classOf[BloomFilterMightContain], exprs => BloomFilterMightContain(exprs(0), exprs(1))),
+    ("word_ngrams", classOf[WordNGrams], exprs => WordNGrams(exprs(0), exprs(1))),
+    ("cdc_chunks", classOf[CdcChunks], exprs => CdcChunks(exprs(0), exprs(1), exprs(2))),
+    ("ssim_pairs", classOf[SsimPairs], exprs => SsimPairs(exprs(0))),
+    ("graft_normalize", classOf[NormalizeText], exprs => NormalizeText(exprs(0), exprs(1)))
   )
 
   /** Imperative registration for sessions created without extensions
@@ -239,11 +241,13 @@ object GraftFunctions {
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    fns.foreach { case (name, builder) =>
+    fns.foreach { case (name, _, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
-    // the full graft fast path: rank-limit queries also get the
-    // sort-free per-key top-k operator
+    // the full graft fast path, as GraftExtensions installs it: HOF dot
+    // products run as vec_dot, and rank-limit queries get the sort-free
+    // per-key top-k operator
+    graft.plans.GraftOptimizations.install(spark)
     graft.plans.GraftStrategies.install(spark)
   }
 }
@@ -253,55 +257,9 @@ object GraftFunctions {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_l2sq"),
-      new ExpressionInfo(classOf[VecL2Sq].getName, "vec_l2sq"),
-      (exprs: Seq[Expression]) => VecL2Sq(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("char_hist16"),
-      new ExpressionInfo(classOf[CharHist16].getName, "char_hist16"),
-      (exprs: Seq[Expression]) => CharHist16(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("graft_bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName,
-        "graft_bloom_might_contain"),
-      (exprs: Seq[Expression]) => BloomFilterMightContain(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_moments"),
-      new ExpressionInfo(classOf[DecimalMomentsAgg].getName, "vec_moments"),
-      (exprs: Seq[Expression]) => DecimalMomentsAgg(exprs(0)).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNGrams].getName, "word_ngrams"),
-      (exprs: Seq[Expression]) => WordNGrams(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_eq_count"),
-      new ExpressionInfo(classOf[VecEqCount].getName, "vec_eq_count"),
-      (exprs: Seq[Expression]) => VecEqCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
-      (exprs: Seq[Expression]) => CdcChunks(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      FunctionIdentifier("ssim_pairs"),
-      new ExpressionInfo(classOf[SsimPairs].getName, "ssim_pairs"),
-      (exprs: Seq[Expression]) => SsimPairs(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "graft_normalize"),
-      (exprs: Seq[Expression]) => NormalizeText(exprs(0), exprs(1))))
+    GraftFunctions.fns.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
     e.injectOptimizerRule(_ => graft.plans.RewriteHofDotProduct)
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
   }

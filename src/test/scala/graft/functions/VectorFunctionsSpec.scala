@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.{SparkSpec, Tables}
 import graft.operators.Ns
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The native codegen vector expressions must be BIT-identical to the
@@ -12,16 +13,25 @@ class VectorFunctionsSpec extends SparkSpec {
 
   test("vec_dot == aggregate(zip_with(...)) bit-for-bit on all pairs") {
     Ns.registerFast(spark)
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), expr(Ns.toDouble("embedding")).as("v"))
-    val a = e.select(col("vec_id").as("ia"), col("v").as("va"))
-    val b = e.select(col("vec_id").as("ib"), col("v").as("vb"))
-    val mismatches = a.join(b, col("ia") < col("ib"))
-      .select(expr(Ns.dot("va", "vb")).as("fast"),
-        expr(Ns.hofDot("va", "vb")).as("slow"))
-      .filter(col("fast") =!= col("slow"))
-      .count()
-    assert(mismatches == 0)
+    // The HOF side runs on a session with nothing registered: on the
+    // shared session RewriteHofDotProduct would turn it into vec_dot and
+    // the test would compare vec_dot with itself.
+    val plain = spark.newSession()
+    def pairs(s: SparkSession, dot: String): DataFrame = {
+      val e = Tables.embeddings(s, sf0001)
+        .select(col("vec_id"), expr(Ns.toDouble("embedding")).as("v"))
+      e.select(col("vec_id").as("ia"), col("v").as("va"))
+        .join(e.select(col("vec_id").as("ib"), col("v").as("vb")), col("ia") < col("ib"))
+        .select(col("ia"), col("ib"), expr(dot).as("d"))
+    }
+    def bits(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1),
+      if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(2))))).toSet
+    val slow = pairs(plain, Ns.hofDot("va", "vb"))
+    val slowPlan = slow.queryExecution.optimizedPlan.toString
+    assert(slowPlan.contains("aggregate(") && !slowPlan.contains("vec_dot"), slowPlan)
+    val fast = bits(pairs(spark, Ns.dot("va", "vb")))
+    assert(fast.nonEmpty)
+    assert(fast === bits(slow))
   }
 
   test("vec_l2sq == HOF squared-distance bit-for-bit") {
@@ -79,15 +89,5 @@ class VectorFunctionsSpec extends SparkSpec {
         expr("aggregate(zip_with(sa, sb, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, x) -> acc + x)").as("slow"))
       .filter(col("fast") =!= col("slow")).count()
     assert(mism == 0)
-  }
-
-  test("extensions class registers the functions") {
-    // A second session in the same JVM picks up the extensions path.
-    val s2 = spark.newSession()
-    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    // injectFunction is exercised at session build; here assert the
-    // imperative path against the fresh session's registry.
-    GraftFunctions.register(s2)
-    assert(s2.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").head().getDouble(0) == 11.0)
   }
 }

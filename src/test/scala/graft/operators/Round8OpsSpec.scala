@@ -46,6 +46,50 @@ class Round8OpsSpec extends SparkSpec {
     assert(!Iterate.release(ck), "second release claimed blocks already dropped")
   }
 
+  test("session memo: a repeat persists nothing, d13 reuses d02's pairs, a new session builds its own") {
+    def run(s: org.apache.spark.sql.SparkSession, q: String) =
+      graft.SparkEntry.queries(q)(s, sf0001).collect().toSeq
+    // RDDs newly persisted while `f` runs, with its result; compared by id,
+    // since the ContextCleaner may drop earlier tests' garbage meanwhile
+    def grows[T](f: => T): (Int, T) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val r = f
+      ((spark.sparkContext.getPersistentRDDs.keySet -- before).size, r)
+    }
+    val s1 = spark.newSession()
+    val (d02Cold, rows) = grows(run(s1, "d02_minhash_lsh"))
+    assert(d02Cold > 0, "d02 built no memo entry")
+    assert(grows(run(s1, "d02_minhash_lsh")) === (0, rows), "a repeat rebuilt its memo")
+    val (d13Warm, d13Rows) = grows(run(s1, "d13_minhash_accuracy"))
+    // d13 alone in a fresh session builds d02's pairs too: the difference
+    // is exactly what d13 reused
+    assert(grows(run(spark.newSession(), "d13_minhash_accuracy")) === (d13Warm + d02Cold, d13Rows))
+    assert(grows(run(spark.newSession(), "d02_minhash_lsh")) === (d02Cold, rows),
+      "a new session must start cold")
+  }
+
+  test("session memo: a rewritten table is rebuilt, matching a fresh session") {
+    val d = java.nio.file.Files.createTempDirectory("graft-memo")
+    try {
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "documents.parquet"),
+        d.resolve("documents.parquet"))
+      def d02(s: org.apache.spark.sql.SparkSession) =
+        graft.SparkEntry.queries("d02_minhash_lsh")(s, d.toString).collect().toSeq
+      def persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val s = spark.newSession()
+      val idle = persisted
+      val before = d02(s)
+      val oldEntries = persisted -- idle
+      assert(oldEntries.nonEmpty, "d02 built no memo entry")
+      graft.Tables.documents(spark, sf0001).orderBy("doc_id").limit(100)
+        .write.mode("overwrite").parquet(d.resolve("documents.parquet").toString)
+      val after = d02(s)
+      assert((oldEntries & persisted).isEmpty, "the entries over the old files were kept")
+      assert(after === d02(spark.newSession()))
+      assert(after !== before, "fixture drift: the rewrite did not change d02")
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(d.toFile)
+  }
+
   test("d19: leakage card equals a scalar replay from the d02 pairs; shard dim leaks hardest") {
     // ground pairs: the oracle-pinned d02 surface, thresholded like d19
     val pairs = graft.SparkEntry.queries("d02_minhash_lsh")(spark, sf0001)

@@ -34,16 +34,18 @@ class RewriteHofDotProductSpec extends SparkSpec {
   test("malformed inputs: ragged lengths and null elements yield NULL, matching the HOF") {
     GraftOptimizations.install(spark)
     graft.functions.GraftFunctions.register(spark)
-    import spark.implicits._
-    val df = Seq(
+    def frame(s: org.apache.spark.sql.SparkSession) = s.createDataFrame(Seq(
       (1L, Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](3.0, 4.0)),  // well-formed
       (2L, Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](3.0)),       // ragged
       (3L, Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](3.0, 4.0)), // null element
       (4L, null, Seq[java.lang.Double](3.0, 4.0))                              // null array
-    ).toDF("id", "a", "b")
+    )).toDF("id", "a", "b")
       .select(col("id"),
         expr("CAST(a AS ARRAY<DOUBLE>)").as("a"), expr("CAST(b AS ARRAY<DOUBLE>)").as("b"))
-    val hof = df.select(col("id"), expr(graft.operators.Ns.hofDot("a", "b")).as("x"))
+    val df = frame(spark)
+    // the HOF itself, on a session without the rule
+    val hof = frame(spark.newSession())
+      .select(col("id"), expr(graft.operators.Ns.hofDot("a", "b")).as("x"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
     val native = df.select(col("id"), expr("vec_dot(a, b)").as("x"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap

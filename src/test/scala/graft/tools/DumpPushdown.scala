@@ -65,28 +65,31 @@ object DumpPushdown {
     // at execution (a filter on a non-join column) — same recipe
     // GridSourceSpec pins: keys 5 and 999 live in blocks 0 and 62 of 64
     val dimDir = java.nio.file.Files.createTempDirectory("graft-pushdown-dim").toString
-    import spark.implicits._
-    Seq((5L, "keep"), (999L, "keep"), (300L, "drop"), (700L, "drop"))
-      .toDF("i", "tier").write.mode("overwrite").parquet(dimDir)
-    val dim = spark.read.parquet(dimDir)
-      .filter(org.apache.spark.sql.functions.col("tier") === "keep")
-    val joined = grid(1024, 64).join(dim, "i").select("i", "j")
-    joined.collect()
-    val rtLines = joined.queryExecution.executedPlan.toString.linesIterator
-      .filter(l => l.contains("RuntimeFilters") || l.contains("GridScan"))
-      .map(_.trim).toSeq.distinct.take(4).mkString("\n")
-    def gridScans(p: org.apache.spark.sql.execution.SparkPlan): Seq[Int] = p.collect {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        gridScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        gridScans(q.plan)
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-        if b.scan.isInstanceOf[graft.sources.GridScan] => Seq(b.inputRDD.getNumPartitions)
-    }.flatten
+    val (rtLines, planned) = try {
+      import spark.implicits._
+      Seq((5L, "keep"), (999L, "keep"), (300L, "drop"), (700L, "drop"))
+        .toDF("i", "tier").write.mode("overwrite").parquet(dimDir)
+      val dim = spark.read.parquet(dimDir)
+        .filter(org.apache.spark.sql.functions.col("tier") === "keep")
+      val joined = grid(1024, 64).join(dim, "i").select("i", "j")
+      joined.collect()
+      val rtLines = joined.queryExecution.executedPlan.toString.linesIterator
+        .filter(l => l.contains("RuntimeFilters") || l.contains("GridScan"))
+        .map(_.trim).toSeq.distinct.take(4).mkString("\n")
+      def gridScans(p: org.apache.spark.sql.execution.SparkPlan): Seq[Int] = p.collect {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          gridScans(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          gridScans(q.plan)
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.scan.isInstanceOf[graft.sources.GridScan] => Seq(b.inputRDD.getNumPartitions)
+      }.flatten
+      (rtLines, gridScans(joined.queryExecution.executedPlan))
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dimDir))
     sb.append("\n### 5. Runtime filtering: join a filtered dim (surviving i-keys 5, 999) on `i`\n\n```\n")
     sb.append(rtLines)
     sb.append(s"\n```\n\nblocks physically planned after the runtime filter: " +
-      s"${gridScans(joined.queryExecution.executedPlan).mkString(",")} of 64 " +
+      s"${planned.mkString(",")} of 64 " +
       "(keys 5 and 999 fall in 2 of the 64 row blocks)\n")
     sb.append("\nThe write-side counterpart (`GridSinkProvider`: staged task files,\n" +
       "atomic two-phase driver commit, abort cleanup) is spec-verified in\n" +
