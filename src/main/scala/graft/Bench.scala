@@ -418,11 +418,13 @@ object Bench {
   /** Large-N solver witness: the temporal-blocking design claims argued in
     * BlockSolver.scala, measured at a size where compute dominates
     * scheduling (N=512: 262144 cells, ~16k iterations to convergence).
-    * Timed ONCE (not median-of-3 — the convergence run is ~50 s and its
-    * thousands of jobs self-average). Reports:
-    *  - the convergence run (supersteps, cells*iterations/sec),
-    *  - per-iteration rates of the block path (96 iters = 6 supersteps)
-    *    vs the declarative cell path (16 iters) -> the blocking speedup,
+    * Timed ONCE (not median-of-3 — the convergence run takes tens of
+    * seconds and its hundreds of jobs self-average). Reports:
+    *  - the convergence run (cells*iterations/sec) and the supersteps it
+    *    kept with the min/median/max of their model-chosen k, from
+    *    `Result.supersteps`, beside the jobs a listener saw,
+    *  - per-iteration rates of the block path (96 iterations) vs the
+    *    declarative cell path (16 iterations) -> the blocking speedup,
     *  - stages per superstep job of the convergence solve, from a listener
     *    (expect 1: the halo is a narrow dependency, not a shuffle stage).
     * Cells-level bit-parity block==cell==oracle is LaplaceSpec's job; this
@@ -431,7 +433,6 @@ object Bench {
   private def solverWitness(spark: SparkSession): String = {
     val n = 512
     val blocks = 32
-    val stepK = 16
     val cells = n.toLong * n
     // jobs and stages of the solve itself; the grid count after it is
     // timed but not traced
@@ -440,7 +441,7 @@ object Bench {
       graft.laplace.BlockSolver.solve(spark, n, numBlocks = blocks))
     r.grid.count()
     val convSec = (System.nanoTime() - t0) / 1e9
-    val supersteps = (r.iterations + stepK - 1) / stepK
+    val ks = r.supersteps.filterNot(_.tail).map(_.k).sorted
     val tb0 = System.nanoTime()
     graft.laplace.BlockSolver.solve(spark, n, numBlocks = blocks, maxIterations = 96).grid.count()
     val blockSecPerIter = (System.nanoTime() - tb0) / 1e9 / 96
@@ -448,7 +449,9 @@ object Bench {
     graft.laplace.CellSolver.solve(spark, n, maxIterations = 16).grid.count()
     val cellSecPerIter = (System.nanoTime() - tc0) / 1e9 / 16
     s""""solver_witness":{"n":$n,"conv_sec":$convSec,"iterations":${r.iterations},""" +
-      s""""supersteps":$supersteps,"cells_iters_per_sec":${(cells * r.iterations / convSec).toLong},""" +
+      s""""supersteps":${r.supersteps.size},"tail":${r.supersteps.exists(_.tail)},""" +
+      s""""k_min":${ks.head},"k_median":${ks(ks.size / 2)},"k_max":${ks.last},""" +
+      s""""cells_iters_per_sec":${(cells * r.iterations / convSec).toLong},""" +
       s""""block_sec_per_iter":$blockSecPerIter,"cell_sec_per_iter":$cellSecPerIter,""" +
       s""""temporal_blocking_speedup":${cellSecPerIter / blockSecPerIter},""" +
       s""""solve_jobs":${trace.jobs},"stages_per_superstep":${trace.stagesSubmitted.toDouble / trace.jobs}}"""

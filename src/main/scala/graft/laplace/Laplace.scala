@@ -35,10 +35,18 @@ object Laplace {
     * reference prints (`Statistics: ... #iters=.. diff=..`) and the full
     * per-iteration max-diff series (the loop-condition signal of
     * `laplace-seq.c:184-209` — O(iterations) doubles on the driver, the
-    * same footprint as the stats themselves).
+    * same footprint as the stats themselves). `supersteps` lists the k of
+    * each superstep a block solve kept, in order; they sum to `iterations`.
+    * A last entry marked `tail` re-ran, from the state before it, a
+    * superstep that converged part-way.
     */
   final case class Result(grid: DataFrame, iterations: Int, finalDiff: Double,
-      history: Seq[Double] = Nil)
+      history: Seq[Double] = Nil, supersteps: Seq[Superstep] = Nil)
+
+  /** One kept superstep of a block solve: its k, and whether it was the
+    * tail redo.
+    */
+  final case class Superstep(k: Int, tail: Boolean = false)
 }
 
 /** O1: distributed grid generation — the reference's scatter step (rank 0

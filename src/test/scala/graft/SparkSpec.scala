@@ -13,6 +13,10 @@ object SparkSpec {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // one stall of the host past the default 120 s heartbeat timeout
+      // (218 s has been seen) would stop this one shared context and fail
+      // every later suite; the heartbeat interval stays at its 10 s default
+      .config("spark.network.timeout", "600s")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

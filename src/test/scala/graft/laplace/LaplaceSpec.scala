@@ -163,12 +163,90 @@ class LaplaceSpec extends SparkSpec {
     for ((arg, solve) <- Seq[(String, () => Laplace.Result)](
         "n" -> (() => BlockSolver.solve(spark, 1)),
         "n" -> (() => BlockSolver.solve(spark, 0)),
-        "stepK" -> (() => BlockSolver.solve(spark, 8, stepK = 0)),
         "stepK" -> (() => BlockSolver.solve(spark, 8, stepK = -3)),
         "numBlocks" -> (() => BlockSolver.solve(spark, 8, numBlocks = -1)),
         "maxIterations" -> (() => BlockSolver.solve(spark, 8, maxIterations = -1)))) {
       val e = intercept[IllegalArgumentException](solve())
       assert(e.getMessage.contains(s"$arg must be"), e.getMessage)
+    }
+  }
+
+  test("stepK = 0 lets the model choose k (N=8), bit-exact") {
+    val res = BlockSolver.solve(spark, 8, stepK = 0)
+    assert(res.supersteps.map(_.k).sum === res.iterations)
+    checkAgainstOracle(8, res)
+  }
+
+  test("cost model: where every ghost range spans the grid, k reaches the landing bound (N=64)") {
+    // J = 20 ms per job, c = 3 ns per cell: a deeper superstep only saves jobs
+    assert(BlockSolver.chooseK(BlockLayout(64, 4), 20e6, 3.0, 1029,
+      BlockSolver.WorkBudgetBytes) === 1029)
+  }
+
+  test("cost model: thin blocks keep k small (N=512, 32 blocks)") {
+    val lay = BlockLayout(512, 32)
+    val k = BlockSolver.chooseK(lay, 20e6, 3.0, 16000, BlockSolver.WorkBudgetBytes)
+    assert(k >= 4 && k <= 32, s"k=$k")
+    for (b <- 0 until 32) assert(lay.extRows(b, 2L * k) < 512, s"block $b spans the grid at k=$k")
+  }
+
+  test("cost model: a binding work-array budget lowers k") {
+    val lay = BlockLayout(64, 4)
+    // 48 extended rows of 64 doubles and a 16-slot vector: k=16 at most
+    val budget = (48L * 64 + 16) * 8
+    val k = BlockSolver.chooseK(lay, 20e6, 3.0, 1029, budget)
+    assert(k >= 1 && k < 1029, s"k=$k")
+    assert((0 until 4).forall(b => (lay.extRows(b, 2L * k).toLong * 64 + k) * 8 <= budget))
+    assert(BlockSolver.chooseK(lay, 20e6, 3.0, 1029, 1L) === 1, "k is at least 1")
+  }
+
+  test("model-chosen k at a larger N: bit-exact, below spanning the grid (N=256, 16 blocks), edges cut below a block (N=128, 2 blocks)") {
+    // with measured costs the choice here sits near the point where every
+    // task relaxing the whole grid becomes cheaper (a job floor of ~50 ms
+    // at ~2.5 ns a cell), so the no-spanning check runs on fixed costs:
+    // J = 20 ms, c = 3 ns
+    val lay = BlockLayout(256, 16)
+    val res = BlockSolver.solveWith(spark, 256, numBlocks = 16, maxIterations = 300,
+      stepK = 0, costs = Some((20e6, 3.0)))
+    assert(res.supersteps.map(_.k).sum === 300)
+    for (st <- res.supersteps; b <- 0 until 16)
+      assert(lay.extRows(b, 2L * st.k) < 256, s"block $b spans the grid at k=${st.k}: ${res.supersteps}")
+    checkAgainstOracle(256, res, maxIterations = 300)
+    val measured = BlockSolver.solve(spark, 256, numBlocks = 16, maxIterations = 300)
+    assert(measured.supersteps.map(_.k).sum === 300)
+    checkAgainstOracle(256, measured, maxIterations = 300)
+    // 64-row blocks at a k of about 8: edge bands shallower than half a
+    // block, so the halo reads bands cut to the model's depth
+    val cut = BlockSolver.solveWith(spark, 128, numBlocks = 2, maxIterations = 200,
+      stepK = 0, costs = Some((1e5, 3.0)))
+    assert(cut.supersteps.drop(1).forall(st => 4 * st.k < 64), cut.supersteps)
+    checkAgainstOracle(128, cut, maxIterations = 200)
+  }
+
+  test("superstep jobs carry labels; the caller's description is restored") {
+    val sc = spark.sparkContext
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(labels.add)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      // JobTrace's fence job drains the listener bus
+      val (res, _) = graft.JobTrace.run(sc)(BlockSolver.solve(spark, 16, numBlocks = 4, stepK = 5))
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      import scala.jdk.CollectionConverters._
+      val got = labels.asScala.toSeq.filter(_.startsWith("laplace"))
+      // 132 iterations: 26 supersteps of 5, then a tail of 2
+      val want = "laplace n=16 init" +: ((1 to 26).map(s => s"laplace n=16 superstep $s k=5") ++
+        Seq("laplace n=16 superstep 27 k=5", "laplace n=16 superstep 27 k=2 tail"))
+      assert(got === want)
+      assert(res.supersteps === Seq.fill(26)(Laplace.Superstep(5)) :+ Laplace.Superstep(2, tail = true))
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
     }
   }
 
