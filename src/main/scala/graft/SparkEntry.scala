@@ -85,7 +85,9 @@ object SparkEntry {
       }, Some(LaplaceOracle.statsSql(16)))
   )
 
-  private def allDefs: Seq[QueryDef] =
+  // built once: the defs and their oracle strings are pure, and every
+  // `queries(name)` / `oracleSql` lookup reads these
+  private lazy val allDefs: Seq[QueryDef] =
     laplaceDefs ++ graft.operators.Relational.defs ++
       graft.operators.TpcH.defs ++
       graft.operators.Dedup.defs ++ graft.operators.TextAnalysis.defs ++
@@ -96,12 +98,12 @@ object SparkEntry {
       graft.operators.Graph.defs ++
       graft.operators.Skew.defs ++ graft.streaming.Streams.defs
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     allDefs.collect { case QueryDef(n, _, Some(sql)) => n -> sql.trim }.toMap
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's read-only parquet tables (see TESTDATA.md /
   * FIXTURES.md). All queries take the sf directory as a parameter so the
@@ -11,10 +12,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pushdown and column pruning for free; at 100 TB the same call reads a
   * partitioned directory tree and Catalyst prunes partitions from query
   * predicates. Nothing here assumes local files.
+  *
+  * Schema memo: without a schema, every `spark.read.parquet` runs a Spark
+  * job that reads the parquet footers. [[table]] keeps the schema Spark
+  * inferred the first time, process-wide, one entry per table path, and
+  * reads with it afterwards, which runs no job. The entry is keyed on the
+  * table's [[fingerprint]] and on the session's explicitly set
+  * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` values, which
+  * change what inference returns (`events()` sets `nanosAsLong`). A
+  * rewritten table or a session with other parquet settings misses,
+  * infers again and replaces the entry, so a stale schema is never
+  * served. Entries live as long as the JVM: one small `StructType` per
+  * table path read.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val parquetConfs = spark.conf.getAll.toSeq
+      .filter { case (k, _) => k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+      .sorted
+    val key = s"${fingerprint(spark, path)};${parquetConfs.mkString(",")}"
+    schemas.get(path) match {
+      case (`key`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemas.put(path, (key, df.schema))
+        df
+    }
+  }
+
+  /** The path, length and mtime of every file under `path`: what changes
+    * when a table is rewritten in place. Keys the schema memo above and
+    * `Dedup.shared`'s session memo.
+    */
+  private[graft] def fingerprint(s: SparkSession, path: String): String = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val files = dir.getFileSystem(s.sessionState.newHadoopConf()).listFiles(dir, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").toSeq.sorted.mkString(",")
+  }
 
   /** `events.ts` has shipped in two physical forms across fixture
     * generations: TIMESTAMP(NANOS) (which Spark's microsecond TimestampType

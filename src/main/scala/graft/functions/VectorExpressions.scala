@@ -237,12 +237,16 @@ object GraftFunctions {
   )
 
   /** Imperative registration for sessions created without extensions
-    * (the driver harness builds plain SparkSessions). Idempotent.
+    * (`graft.Bench` and `graft.Verify` build plain ones). Idempotent: a name
+    * already registered to its graft class is left alone, so a repeat
+    * call replaces nothing (Spark logs a WARN per replaced function).
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    fns.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    fns.foreach { case (name, cls, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!reg.lookupFunction(id).exists(_.getClassName == cls.getName))
+        reg.registerFunction(id, new ExpressionInfo(cls.getName, name), builder)
     }
     // the full graft fast path, as GraftExtensions installs it: HOF dot
     // products run as vec_dot, and rank-limit queries get the sort-free

@@ -40,12 +40,13 @@ object Dedup {
     * once (~2 s each, the bulk of the g-family subtotal) as a
     * localCheckpoint — at 100 TB, the edge table materialized once per run.
     *
-    * Keys: `d`; path, length and mtime of every file under `d`, so a
-    * rewritten table is rebuilt (entries over the old files are dropped
-    * with their checkpoints at the next call for `d`; a frame taken from
-    * one fails if run again); the shuffle-partition setting, so the
-    * bench's partitioning-invariance witness rebuilds; and `kind`. Values
-    * are (schema, row RDD), since a DataFrame would reference its session.
+    * Keys: `d`; [[Tables.fingerprint]] of `d` (path, length and mtime
+    * of every file under it), so a rewritten table is rebuilt (entries
+    * over the old files are dropped with their checkpoints at the next
+    * call for `d`; a frame taken from one fails if run again); the
+    * shuffle-partition setting, so the bench's partitioning-invariance
+    * witness rebuilds; and `kind`. Values are (schema, row RDD), since a
+    * DataFrame would reference its session.
     *
     * Lifetime: each session has its own entries (a fresh one starts
     * cold) for as long as it lives. Spark keeps a session that has run an
@@ -56,18 +57,11 @@ object Dedup {
   private val memo = new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
     (String, String, String, String), (StructType, RDD[Row])]]
 
-  private def fingerprint(s: SparkSession, d: String): String = {
-    val dir = new org.apache.hadoop.fs.Path(d)
-    val files = dir.getFileSystem(s.sessionState.newHadoopConf()).listFiles(dir, true)
-    Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
-      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").toSeq.sorted.mkString(",")
-  }
-
   private[operators] def shared(s: SparkSession, d: String, kind: String)(build: => DataFrame): DataFrame = {
     val entries = memo.synchronized {
       memo.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap)
     }
-    val key = (d, fingerprint(s, d), s.conf.get("spark.sql.shuffle.partitions"), kind)
+    val key = (d, Tables.fingerprint(s, d), s.conf.get("spark.sql.shuffle.partitions"), kind)
     entries.forEach { (k, v) =>
       if (k._1 == d && k._2 != key._2 && entries.remove(k, v)) Iterate.releaseRDD(v._2)
     }
@@ -1074,12 +1068,18 @@ object Dedup {
     // the 16-hash signature estimate vs the TRUE distinct-shingle
     // Jaccard — the per-pair error card that justifies (or indicts) the
     // sketch size before a 100 TB dedup run trusts it. True Jaccard is
-    // computed ONLY for the candidate pairs (a candidate-keyed shingle
-    // equi-join — never all-pairs), in exact integers: |A∩B| from the
-    // join, |A∪B| = na + nb − common, both micro-quantized by positive
-    // floor division; est·1e6 = matches·62500 is an exact integral
-    // double, so the BIGINT cast is lossless in both engines. Scale:
-    // candidate-pair-bounded join fan-out, same blocking as d02.
+    // computed ONLY for the candidate pairs, in exact integers: each
+    // candidate doc's distinct-shingle array is built once and joined to
+    // the pair on both sides; |A∩B| = size(array_intersect), |A∪B| =
+    // na + nb − common, micro-quantized by positive BIGINT floor
+    // division. Pairs that share no shingle are dropped, as the oracle's
+    // shingle equi-join drops them. est·1e6 = matches·62500 is an exact
+    // integral double, so the BIGINT cast is lossless in both engines.
+    // The pair table comes from the session memo d02 built (keyed on
+    // the files under `d`, the partition setting and the kind; it lives
+    // with the session), so after d02 this query persists nothing and
+    // never shuffles the exploded shingles. Scale: one array row per doc,
+    // join fan-out bounded by the d02 blocking.
     QueryDef("d13_minhash_accuracy",
       (s, d) => {
         val pairs = minhashPairsShared(s, d)
@@ -1088,23 +1088,15 @@ object Dedup {
         val sh = Tables.documents(s, d)
           .withColumn("toks", split(col("text"), " "))
           .filter(size(col("toks")) >= 3)
-          .select(col("doc_id"), explode(array_distinct(expr(
-            "transform(sequence(0, size(toks) - 3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"))).as("sh"))
-        // per-doc distinct-shingle counts from the session memo (same
-        // values as counting sh — the lang column doesn't change the
-        // explode); the explode itself is still needed for the
-        // per-candidate intersection join below
-        val sizes = shingleSizesShared(s, d)
-          .select(col("doc_id"), col("n").as("nsh"))
-        val common = pairs
-          .join(sh.select(col("doc_id").as("doc_a"), col("sh")), "doc_a")
-          .join(sh.select(col("doc_id").as("db"), col("sh").as("sh_b")),
-            col("doc_b") === col("db") && col("sh") === col("sh_b"))
-          .groupBy("doc_a", "doc_b", "est_micro")
-          .agg(count(lit(1)).as("n_common"))
-        common
-          .join(sizes.select(col("doc_id").as("doc_a"), col("nsh").as("na")), "doc_a")
-          .join(sizes.select(col("doc_id").as("doc_b"), col("nsh").as("nb")), "doc_b")
+          .select(col("doc_id"), array_distinct(expr(
+            "transform(sequence(0, size(toks) - 3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")).as("sh"))
+        pairs
+          .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sa")), "doc_a")
+          .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sb")), "doc_b")
+          .select(col("doc_a"), col("doc_b"), col("est_micro"),
+            size(array_intersect(col("sa"), col("sb"))).cast("bigint").as("n_common"),
+            size(col("sa")).cast("bigint").as("na"), size(col("sb")).cast("bigint").as("nb"))
+          .filter(col("n_common") > 0)
           .select(col("doc_a"), col("doc_b"), col("est_micro"),
             expr("n_common * 1000000 div (na + nb - n_common)").as("true_micro"))
           .withColumn("err_micro", abs(col("est_micro") - col("true_micro")))

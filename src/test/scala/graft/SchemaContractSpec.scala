@@ -11,6 +11,14 @@ class SchemaContractSpec extends SparkSpec {
     assert(drift.isEmpty, "\nFIXTURE SCHEMA DRIFT:\n" + drift.mkString("\n"))
   }
 
+  test("a table's schema is inferred once per file version: a fresh session's read runs no job") {
+    val first = Tables.documents(spark.newSession(), sf0001).schema
+    val fresh = spark.newSession()
+    val (schema, trace) = JobTrace.run(spark.sparkContext)(Tables.documents(fresh, sf0001).schema)
+    assert(trace.jobs === 0, "the second read inferred the schema again")
+    assert(schema === first)
+  }
+
   test("events loader normalizes ts to TimestampType across fixture generations") {
     val ts = Tables.events(spark, sf0001).schema("ts").dataType
     assert(ts == org.apache.spark.sql.types.TimestampType,

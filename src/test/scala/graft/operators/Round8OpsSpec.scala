@@ -61,6 +61,7 @@ class Round8OpsSpec extends SparkSpec {
     assert(d02Cold > 0, "d02 built no memo entry")
     assert(grows(run(s1, "d02_minhash_lsh")) === (0, rows), "a repeat rebuilt its memo")
     val (d13Warm, d13Rows) = grows(run(s1, "d13_minhash_accuracy"))
+    assert(d13Warm === 0, "d13 after d02 persisted its own memo entries")
     // d13 alone in a fresh session builds d02's pairs too: the difference
     // is exactly what d13 reused
     assert(grows(run(spark.newSession(), "d13_minhash_accuracy")) === (d13Warm + d02Cold, d13Rows))
@@ -81,9 +82,12 @@ class Round8OpsSpec extends SparkSpec {
       val before = d02(s)
       val oldEntries = persisted -- idle
       assert(oldEntries.nonEmpty, "d02 built no memo entry")
+      // the rewrite adds a column: the schema memo must not serve the old one
       graft.Tables.documents(spark, sf0001).orderBy("doc_id").limit(100)
+        .withColumn("extra", org.apache.spark.sql.functions.lit(1))
         .write.mode("overwrite").parquet(d.resolve("documents.parquet").toString)
       val after = d02(s)
+      assert(graft.Tables.documents(s, d.toString).columns.last === "extra")
       assert((oldEntries & persisted).isEmpty, "the entries over the old files were kept")
       assert(after === d02(spark.newSession()))
       assert(after !== before, "fixture drift: the rewrite did not change d02")

@@ -32,6 +32,13 @@ class SparkInternalsSpec extends SparkSpec {
     val before = registry.listFunction().map(_.funcName).toSet
     GraftFunctions.register(s)
     val imperative = registry.listFunction().map(_.funcName).toSet -- before
+    // a repeat call replaces nothing: every registration is the same object
+    val infos = imperative.toSeq.map(n => registry.lookupFunction(FunctionIdentifier(n)).get)
+    GraftFunctions.register(s)
+    assert(imperative.toSeq.map(n => registry.lookupFunction(FunctionIdentifier(n)).get)
+      .zip(infos).forall { case (a, b) => a eq b }, "a repeat call re-registered a function")
+    assert(registry.lookupFunction(FunctionIdentifier("vec_dot")).map(_.getClassName) ===
+      Some(classOf[VecDot].getName))
     assert(s.experimental.extraOptimizations.contains(RewriteHofDotProduct))
     assert(s.experimental.extraStrategies.contains(TopKPerKeyStrategy))
 
