@@ -421,8 +421,10 @@ object Bench {
     * Timed ONCE (not median-of-3 — the convergence run takes tens of
     * seconds and its hundreds of jobs self-average). Reports:
     *  - the convergence run (cells*iterations/sec) and the supersteps it
-    *    kept with the min/median/max of their model-chosen k, from
-    *    `Result.supersteps`, beside the jobs a listener saw,
+    *    kept with the min/median/max of their model-chosen k and how many
+    *    ran on one block, from `Result.supersteps`, beside the jobs a
+    *    listener saw and the interior cells its tasks relaxed (ghost
+    *    copies included, from the `laplace.cells` accumulator),
     *  - per-iteration rates of the block path (96 iterations) vs the
     *    declarative cell path (16 iterations) -> the blocking speedup,
     *  - stages per superstep job of the convergence solve, from a listener
@@ -450,6 +452,8 @@ object Bench {
     val cellSecPerIter = (System.nanoTime() - tc0) / 1e9 / 16
     s""""solver_witness":{"n":$n,"conv_sec":$convSec,"iterations":${r.iterations},""" +
       s""""supersteps":${r.supersteps.size},"tail":${r.supersteps.exists(_.tail)},""" +
+      s""""one_block_supersteps":${r.supersteps.count(_.blocks == 1)},""" +
+      s""""cells":${trace.counters.getOrElse("laplace.cells", 0L)},""" +
       s""""k_min":${ks.head},"k_median":${ks(ks.size / 2)},"k_max":${ks.last},""" +
       s""""cells_iters_per_sec":${(cells * r.iterations / convSec).toLong},""" +
       s""""block_sec_per_iter":$blockSecPerIter,"cell_sec_per_iter":$cellSecPerIter,""" +

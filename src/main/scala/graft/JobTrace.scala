@@ -10,11 +10,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import scala.jdk.CollectionConverters._
 
 /** What the Spark jobs of one traced block did: stages per job (in job
-  * start order), stages submitted (skipped stages are not), and the
-  * shuffle bytes their tasks wrote and read.
+  * start order), stages submitted (skipped stages are not), the shuffle
+  * bytes their tasks wrote and read, and the sum of their tasks' updates
+  * to each named `Long` accumulator (`laplace.cells`, say), by name.
   */
 final case class JobTrace(stagesPerJob: Seq[Int], stagesSubmitted: Int,
-    shuffleWriteBytes: Long, shuffleReadBytes: Long) {
+    shuffleWriteBytes: Long, shuffleReadBytes: Long, counters: Map[String, Long]) {
   def jobs: Int = stagesPerJob.size
 }
 
@@ -42,6 +43,7 @@ object JobTrace {
     val submitted = new AtomicInteger
     val written = new AtomicLong
     val read = new AtomicLong
+    val counters = new ConcurrentHashMap[String, AtomicLong]
     def tag(p: java.util.Properties): String = if (p == null) null else p.getProperty(Key)
     val listener = new SparkListener {
       override def onJobStart(s: SparkListenerJobStart): Unit = tag(s.properties) match {
@@ -57,6 +59,11 @@ object JobTrace {
         if (e.taskMetrics != null && stageIds.contains(e.stageId)) {
           written.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
           read.addAndGet(e.taskMetrics.shuffleReadMetrics.totalBytesRead)
+          for (a <- e.taskInfo.accumulables; name <- a.name) a.update match {
+            case Some(v: java.lang.Long) =>
+              counters.computeIfAbsent(name, _ => new AtomicLong).addAndGet(v)
+            case _ =>
+          }
         }
     }
     val saved = sc.getLocalProperty(Key)
@@ -67,7 +74,8 @@ object JobTrace {
       sc.parallelize(Seq(1), 1).count()
       if (!fenced.await(60, TimeUnit.SECONDS))
         throw new IllegalStateException("JobTrace: listener bus stalled")
-      (result, JobTrace(stagesPerJob.asScala.toSeq, submitted.get, written.get, read.get))
+      (result, JobTrace(stagesPerJob.asScala.toSeq, submitted.get, written.get, read.get,
+        counters.asScala.map { case (k, v) => k -> v.get }.toMap))
     } finally {
       sc.setLocalProperty(Key, saved)
       sc.removeSparkListener(listener)

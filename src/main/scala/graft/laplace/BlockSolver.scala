@@ -86,6 +86,51 @@ private final class HaloDependency(edges: RDD[RowBand], layout: BlockLayout, gho
   override def getParents(b: Int): Seq[Int] = layout.haloBlocks(b, ghost).filter(_ != b)
 }
 
+/** Block b of layout `to` reads the blocks of layout `from` that overlap
+  * its rows: all of them when `to` has one block, one when `from` does.
+  */
+private final class ReblockDependency(state: RDD[RowBand], from: BlockLayout, to: BlockLayout)
+    extends NarrowDependency[RowBand](state) {
+  override def getParents(b: Int): Seq[Int] = from.blockOf(to.lo(b)) to from.blockOf(to.hi(b))
+}
+
+/** Partition b's inputs, resolved on the driver: the state partitions its
+  * [[ReblockDependency]] names.
+  */
+private final class ReblockPartition(val index: Int, val parts: Array[Partition])
+    extends Partition
+
+/** `state`, one [[RowBand]] per block of `from`, re-cut into the blocks of
+  * `to`: partition b reads the `from` blocks its [[ReblockDependency]]
+  * names and emits their rows in b's range. Gathers the blocks into one, or
+  * cuts one into blocks, in the stage that reads it: no shuffle and no job
+  * of its own. Row arrays are shared, not copied.
+  */
+private final class ReblockRDD(private var state: RDD[RowBand], from: BlockLayout,
+    to: BlockLayout)
+    extends RDD[RowBand](state.context, Seq(new ReblockDependency(state, from, to))) {
+
+  override protected def getPartitions: Array[Partition] = {
+    val dep = dependencies.head.asInstanceOf[ReblockDependency]
+    Array.tabulate(to.blocks)(b =>
+      new ReblockPartition(b, dep.getParents(b).map(state.partitions).toArray))
+  }
+
+  override def compute(split: Partition, ctx: TaskContext): Iterator[RowBand] = {
+    val b = split.index
+    val rows = new Array[Array[Double]](to.hi(b) - to.lo(b) + 1)
+    for (p <- split.asInstanceOf[ReblockPartition].parts; band <- state.iterator(p, ctx);
+         i <- math.max(band.lo, to.lo(b)) to math.min(band.hi, to.hi(b)))
+      rows(i - to.lo(b)) = band.rows(i - band.lo)
+    Iterator.single(RowBand(to.lo(b), rows))
+  }
+
+  override protected def clearDependencies(): Unit = {
+    super.clearDependencies()
+    state = null
+  }
+}
+
 /** Task b's inputs, resolved on the driver: block b of the state and the
   * edge partitions its [[HaloDependency]] names.
   */
@@ -105,7 +150,8 @@ private final class SuperstepRDD(
     kk: Int,
     omega: Double,
     private var acc: MaxVecAccumulator,
-    private var kernelNs: LongAccumulator)
+    private var kernelNs: LongAccumulator,
+    private var cells: LongAccumulator)
     extends RDD[RowBand](state.context,
       Seq(new OneToOneDependency(state), new HaloDependency(edges, layout, 2 * kk))) {
 
@@ -138,6 +184,8 @@ private final class SuperstepRDD(
     val t0 = System.nanoTime()
     val localMax = relax(work, extLo, own.lo, own.hi)
     kernelNs.add(System.nanoTime() - t0)
+    // relax updates every row of the extended range but its first and last
+    cells.add(kk.toLong * math.max(0, extHi - extLo - 1) * (n - 2))
     var t = 0
     while (t < kk) {
       if (localMax(t) != Double.NegativeInfinity) acc.add((t, localMax(t)))
@@ -195,6 +243,7 @@ private final class SuperstepRDD(
     edges = null
     acc = null
     kernelNs = null
+    cells = null
   }
 }
 
@@ -260,10 +309,18 @@ private final class SuperstepRDD(
   * next k is known, so they are cut as deep as the model would go with no
   * landing bound, and the next k is capped at that depth.
   *
-  * When every ghost-extended range spans the grid (at N=64 with 4 blocks,
-  * from k = 24 on), a deeper superstep adds no arithmetic and the model
-  * runs one superstep to the predicted convergence; the gain there is
-  * fewer jobs, not less compute.
+  * When every ghost-extended range of a superstep spans the grid (at N=64
+  * with 4 blocks, from k = 24 on), every block's task would relax all N
+  * rows, so the solve coarsens to one block instead: one task gathers the
+  * blocks through a narrow all-to-one dependency ([[ReblockRDD]]) and
+  * relaxes the grid once, and the solve stays on one block to the end. A
+  * one-block superstep is the sequential loop, bit for bit, and runs
+  * through the same superstep, chooser, landing and checkpoint code; with
+  * one block the chooser's k is the predicted remainder. `Result.grid` is
+  * cut back to the requested blocks from the last state, in the stage that
+  * reads it. Before coarsening the chooser still prices a spanning k at
+  * one whole grid per block. A `laplace.cells` accumulator counts the
+  * interior cells relaxed, ghost copies included.
   *
   * At P executors on a 10^6-point dimension, a superstep is P tasks in
   * one stage, each reading its own cached block plus O(k·N) halo doubles
@@ -285,12 +342,17 @@ object BlockSolver {
   }
 
   /** The first and last `depth` rows of a block, or the whole block when
-    * those overlap. Row arrays are shared with the state, never copied.
+    * those overlap. Row arrays are shared with the state, never copied. A
+    * named function rather than a lambda: `ClosureCleaner` returns at once
+    * for it instead of parsing class files on every superstep.
     */
-  private def edgeBands(block: RowBand, depth: Int): Iterator[RowBand] =
-    if (block.rows.length <= 2 * depth) Iterator.single(block)
-    else Iterator(RowBand(block.lo, block.rows.take(depth)),
-      RowBand(block.hi - depth + 1, block.rows.takeRight(depth)))
+  private final class EdgeBands(depth: Int) extends (RowBand => Iterator[RowBand])
+      with Serializable {
+    def apply(block: RowBand): Iterator[RowBand] =
+      if (block.rows.length <= 2 * depth) Iterator.single(block)
+      else Iterator(RowBand(block.lo, block.rows.take(depth)),
+        RowBand(block.hi - depth + 1, block.rows.takeRight(depth)))
+  }
 
   /** Per-task byte budget of a superstep's arrays: the `work` rows
     * (extended rows × N × 8) plus the k-slot max vector. Bounds k where the
@@ -339,6 +401,15 @@ object BlockSolver {
     ((1 to math.min(kMax, kSat)) :+ kMax).minBy(cost)
   }
 
+  /** The layout a superstep of depth k runs on from a state in `layout`:
+    * one block when every block's ghost-extended range spans the grid
+    * (with one block it always does), else `layout`.
+    */
+  private def runLayout(layout: BlockLayout, k: Int): BlockLayout =
+    if ((0 until layout.blocks).forall(layout.extRows(_, 2L * k) == layout.n))
+      BlockLayout(layout.n, 1)
+    else layout
+
   /** Iterations still needed to reach `eps`, extrapolating the decay rate
     * of the later half of `history` (SOR at its optimal omega decays at a
     * near-constant rate); None while the history is too short or not
@@ -367,32 +438,40 @@ object BlockSolver {
 
   /** [[solve]], with `costs` = Some((jobNs, cellNs)) standing in for the
     * measured floors in every choice of k, which makes the choices a
-    * function of the history alone.
+    * function of the history alone. `fault` runs on the driver after the
+    * job of every superstep, with the superstep's number: a test throws
+    * from it to check what a failed solve leaves behind.
     */
   private[laplace] def solveWith(spark: SparkSession, n: Int, numBlocks: Int,
-      maxIterations: Int, stepK: Int, costs: Option[(Double, Double)]): Laplace.Result = {
+      maxIterations: Int, stepK: Int, costs: Option[(Double, Double)],
+      fault: Int => Unit = _ => ()): Laplace.Result = {
     // the reference rejects N < 2 (`laplace-seq.c:154-161`)
     require(n >= 2, s"n must be >= 2, got $n")
     require(stepK >= 0, s"stepK must be >= 0, got $stepK")
     require(numBlocks >= 0, s"numBlocks must be >= 0, got $numBlocks")
     require(maxIterations >= 0, s"maxIterations must be >= 0, got $maxIterations")
     val sc = spark.sparkContext
-    val requested = if (numBlocks > 0) numBlocks else sc.defaultParallelism
-    val layout = BlockLayout(n, math.max(1, math.min(requested, n)))
+    val requested = BlockLayout(n,
+      math.max(1, math.min(if (numBlocks > 0) numBlocks else sc.defaultParallelism, n)))
     val om = Laplace.omega(n)
     val eps = Laplace.epsilon(n)
     val kernelNs = sc.longAccumulator("laplace.kernel_ns")
-    // tasks of one superstep run in waves of at most this many at a time
-    val parallel = math.max(1, math.min(layout.blocks, sc.defaultParallelism))
+    val cells = sc.longAccumulator("laplace.cells")
     // measured floors: driver wall time of a superstep job beyond its share
     // of kernel time, and kernel ns per extended-range cell per iteration
     var jobNs = Double.PositiveInfinity
     var cellNs = Double.PositiveInfinity
-    def model(remaining: Int): Int = {
+    def model(layout: BlockLayout, remaining: Int): Int = {
       val (j, c) = costs.getOrElse((jobNs, cellNs))
       chooseK(layout, j, c, remaining, WorkBudgetBytes)
     }
     val savedDescription = sc.getLocalProperty(JobDescription)
+    // every RDD the solve has persisted and not yet released: a failed
+    // solve releases them all
+    val held = scala.collection.mutable.LinkedHashSet.empty[RDD[RowBand]]
+    def release(rdds: RDD[RowBand]*): Unit = rdds.foreach { r =>
+      held -= r; Iterate.releaseRDD(r)
+    }
 
     /** Marks `state` for local checkpoint and materialises it together
       * with its edge RDD, cut for supersteps of up to `kDepth` iterations,
@@ -402,35 +481,45 @@ object BlockSolver {
     def materialize(state: RDD[RowBand], kDepth: Int, label: String): RDD[RowBand] = {
       sc.setLocalProperty(JobDescription, s"laplace n=$n $label")
       state.localCheckpoint()
+      held += state
       val depth = math.min(2L * kDepth, n.toLong).toInt
-      val edges = state.flatMap(edgeBands(_, depth)).persist(StorageLevel.MEMORY_AND_DISK)
-      edges.count()
+      val edges = state.flatMap(new EdgeBands(depth)).persist(StorageLevel.MEMORY_AND_DISK)
+      held += edges
+      Iterate.drain(edges)
       edges
     }
 
-    /** Runs `kk` iterations from (`state`, `edges`), leaving edges deep
-      * enough for a next superstep of up to `kDepth` iterations.
+    /** Runs `kk` iterations from (`state`, `edges`) in `layout` on the
+      * blocks of `run`, leaving edges deep enough for a next superstep of
+      * up to `kDepth` iterations.
       */
-    def superstep(state: RDD[RowBand], edges: RDD[RowBand], kk: Int, kDepth: Int,
+    def superstep(state: RDD[RowBand], layout: BlockLayout, edges: RDD[RowBand],
+        run: BlockLayout, kk: Int, kDepth: Int, s: Int,
         label: String): (RDD[RowBand], RDD[RowBand], Array[Double]) = {
       val acc = new MaxVecAccumulator(kk)
       sc.register(acc, s"laplaceMaxDiff $label")
-      val next = new SuperstepRDD(state, edges, layout, kk, om, acc, kernelNs)
+      // on one block the halo dependency names no edge partition
+      val input = if (run == layout) state else new ReblockRDD(state, layout, run)
+      val next = new SuperstepRDD(input, edges, run, kk, om, acc, kernelNs, cells)
       val kernel0 = kernelNs.value
       val t0 = System.nanoTime()
       val nextEdges = materialize(next, kDepth, label)
       val wallNs = (System.nanoTime() - t0).toDouble
       val kernel = (kernelNs.value - kernel0).toDouble
+      // tasks of one superstep run in waves of at most this many at a time
+      val parallel = math.max(1, math.min(run.blocks, sc.defaultParallelism))
       jobNs = math.min(jobNs, math.max(0.0, wallNs - kernel / parallel))
-      cellNs = math.min(cellNs, kernel / (kk.toDouble * n * layout.extRowsTotal(2L * kk)))
+      cellNs = math.min(cellNs, kernel / (kk.toDouble * n * run.extRowsTotal(2L * kk)))
+      fault(s)
       (next, nextEdges, acc.value)
     }
 
     try {
       // `k` is the next superstep's depth and `kDepth` the deepest one the
-      // current edges serve (2·kDepth rows)
+      // current edges serve (2·kDepth rows); `layout` is the state's
       var k = if (stepK > 0) stepK else FirstK
       var kDepth = k
+      var layout = requested
       var state = initialState(sc, layout)
       var edges = materialize(state, kDepth, "init")
       var iterations = 0
@@ -442,48 +531,55 @@ object BlockSolver {
       while (!converged && iterations < maxIterations) {
         s += 1
         val kk = math.min(k.toLong, maxIterations.toLong - iterations).toInt
+        val run = runLayout(layout, kk)
         // edges for the superstep after this one, as deep as the model could
         // want it (landing only shortens a superstep); before any
         // measurement, as deep as the budget allows
         val kNextDepth =
           if (stepK > 0) stepK
-          else if (s > 1) model(Int.MaxValue)
-          else maxK(layout, Int.MaxValue, WorkBudgetBytes)
-        val (next, nextEdges, maxes) = superstep(state, edges, kk, kNextDepth, s"superstep $s k=$kk")
+          else if (s > 1) model(run, Int.MaxValue)
+          else maxK(run, Int.MaxValue, WorkBudgetBytes)
+        val (next, nextEdges, maxes) =
+          superstep(state, layout, edges, run, kk, kNextDepth, s, s"superstep $s k=$kk")
         val idx = maxes.indexWhere(_ <= eps)
         if (idx < 0 || idx == kk - 1) {
-          Iterate.releaseRDD(state); Iterate.releaseRDD(edges)
-          state = next; edges = nextEdges; kDepth = kNextDepth; iterations += kk
-          history ++= maxes; steps += Laplace.Superstep(kk)
+          release(state, edges)
+          state = next; edges = nextEdges; layout = run; kDepth = kNextDepth; iterations += kk
+          history ++= maxes; steps += Laplace.Superstep(kk, run.blocks)
           maxDiff = maxes(kk - 1); converged = idx >= 0
           if (stepK == 0) {
             val left = math.min(predictRemaining(history, eps).getOrElse(kk),
               maxIterations - iterations)
-            k = math.min(kDepth, model(left))
+            k = math.min(kDepth, model(layout, left))
           }
         } else {
           // converged mid-superstep: redo exactly idx+1 iterations so the
           // materialized grid is the state right after the converging
           // iteration (the reference stops there: `laplace-seq.c:209`)
-          Iterate.releaseRDD(next); Iterate.releaseRDD(nextEdges)
+          release(next, nextEdges)
           val kk2 = idx + 1
+          val tailRun = runLayout(layout, kk2)
           // no superstep reads the tail's edges
           val (tail, tailEdges, tailMaxes) =
-            superstep(state, edges, kk2, 1, s"superstep $s k=$kk2 tail")
-          Iterate.releaseRDD(state); Iterate.releaseRDD(edges)
-          state = tail; edges = tailEdges
-          iterations += kk2; history ++= tailMaxes; steps += Laplace.Superstep(kk2, tail = true)
+            superstep(state, layout, edges, tailRun, kk2, 1, s, s"superstep $s k=$kk2 tail")
+          release(state, edges)
+          state = tail; edges = tailEdges; layout = tailRun
+          iterations += kk2; history ++= tailMaxes
+          steps += Laplace.Superstep(kk2, tailRun.blocks, tail = true)
           maxDiff = tailMaxes(kk2 - 1); converged = true
         }
       }
-      Iterate.releaseRDD(edges)
+      release(edges)
       import spark.implicits._
-      // the canonical (i, j, v) cell table, straight from the blocks
-      val cells = state.flatMap(b =>
+      // the canonical (i, j, v) cell table, straight from the blocks, in the
+      // requested blocks whatever the last superstep ran on
+      val table = new ReblockRDD(state, layout, requested).flatMap(b =>
         for (r <- b.rows.indices.iterator; j <- b.rows(r).indices.iterator)
           yield (b.lo + r, j, b.rows(r)(j)))
-      Laplace.Result(spark.createDataset(cells).toDF("i", "j", "v"), iterations, maxDiff,
+      Laplace.Result(spark.createDataset(table).toDF("i", "j", "v"), iterations, maxDiff,
         history.toSeq, steps.result())
+    } catch {
+      case e: Throwable => release(held.toSeq: _*); throw e
     } finally sc.setLocalProperty(JobDescription, savedDescription)
   }
 }

@@ -43,10 +43,10 @@ object Laplace {
   final case class Result(grid: DataFrame, iterations: Int, finalDiff: Double,
       history: Seq[Double] = Nil, supersteps: Seq[Superstep] = Nil)
 
-  /** One kept superstep of a block solve: its k, and whether it was the
-    * tail redo.
+  /** One kept superstep of a block solve: its k, the number of blocks
+    * (tasks) it ran on, and whether it was the tail redo.
     */
-  final case class Superstep(k: Int, tail: Boolean = false)
+  final case class Superstep(k: Int, blocks: Int, tail: Boolean = false)
 }
 
 /** O1: distributed grid generation — the reference's scatter step (rank 0

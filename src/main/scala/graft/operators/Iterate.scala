@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graft.InternalBridge
@@ -60,7 +61,7 @@ object Iterate {
       if (!r.isNullAt(idx) && r.getBoolean(idx)) acc.add(1L)
       r.copy()
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    mapped.count() // the one materialization job
+    drain(mapped) // the one materialization job
     (InternalBridge.internalCreateDataFrame(spark, mapped, df.schema), acc.value)
   }
 
@@ -77,8 +78,32 @@ object Iterate {
     val spark = df.sparkSession
     val mapped = df.queryExecution.toRdd.map(_.copy())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = mapped.count() // the one materialization job
+    val n = drain(mapped) // the one materialization job
     (InternalBridge.internalCreateDataFrame(spark, mapped, df.schema), n)
+  }
+
+  /** Computes every partition of `rdd` in one job and returns its row
+    * count: the library's one way to materialise an RDD (`count()`, minus
+    * the closure cleaning). The per-partition count is a named function and
+    * the total is summed in the result handler, on the driver, so
+    * `ClosureCleaner` returns at once instead of re-reading and parsing
+    * the class files of `RDD` and `SparkContext` on every call. Like
+    * `count()` it runs `rdd`'s pending checkpoint afterwards.
+    */
+  private[graft] def drain(rdd: RDD[_]): Long = {
+    var total = 0L
+    rdd.sparkContext.runJob(rdd, CountPartition, rdd.partitions.indices,
+      (_: Int, rows: Long) => total += rows)
+    total
+  }
+
+  private object CountPartition extends ((TaskContext, Iterator[Any]) => Long)
+      with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[Any]): Long = {
+      var rows = 0L
+      while (it.hasNext) { it.next(); rows += 1 }
+      rows
+    }
   }
 
   /** Unpersist the checkpoint blocks behind a SUPERSEDED loop state.

@@ -65,7 +65,16 @@ class LaplaceSpec extends SparkSpec {
     // each block reads edge bands from two and four blocks on each side.
     // N=24 converges after 240 iterations, a multiple of 4, so only k=7
     // ends in a mid-superstep tail redo
-    checkAgainstOracle(24, BlockSolver.solve(spark, 24, numBlocks = 6, stepK = 4))
+    val (four, trace) = graft.JobTrace.run(spark.sparkContext)(
+      BlockSolver.solve(spark, 24, numBlocks = 6, stepK = 4))
+    checkAgainstOracle(24, four)
+    // laplace.cells: per iteration, every block relaxes the rows of its
+    // extended range but the first and last (a ghost edge row, or a grid
+    // boundary row) across the N-2 interior columns
+    val lay = BlockLayout(24, 6)
+    assert(four.supersteps.forall(st => st.k == 4 && st.blocks == 6 && !st.tail), four.supersteps)
+    assert(trace.counters("laplace.cells") ===
+      four.iterations.toLong * (0 until 6).map(lay.extRows(_, 8) - 2).sum * 22)
     val res = BlockSolver.solve(spark, 24, numBlocks = 6, stepK = 7)
     assert(res.iterations > 2 * 7 && res.iterations % 7 != 0,
       s"${res.iterations} iterations: want several full supersteps plus a tail")
@@ -157,6 +166,63 @@ class LaplaceSpec extends SparkSpec {
     // job per superstep and blow this bound
     assert(trace.jobs <= supersteps + 3, s"${trace.jobs} jobs for $supersteps supersteps")
     checkAgainstOracle(16, res)
+    // k=16 spans the grid from every block: the solve gathers the blocks
+    // into one task, still without a shuffle, and the grid comes back in
+    // the 4 blocks asked for
+    val (coarse, coarseTrace) = graft.JobTrace.run(spark.sparkContext)(
+      BlockSolver.solve(spark, 16, numBlocks = 4, stepK = 16))
+    assert(coarse.supersteps.forall(_.blocks == 1), coarse.supersteps)
+    assert(coarseTrace.shuffleWriteBytes + coarseTrace.shuffleReadBytes === 0L)
+    assert(coarseTrace.stagesPerJob.forall(_ == 1), s"stages per job: ${coarseTrace.stagesPerJob}")
+    assert(coarse.grid.rdd.getNumPartitions === 4)
+    checkAgainstOracle(16, coarse)
+  }
+
+  test("laplace.cells: a coarsened 4-block solve relaxes what a 1-block solve does (N=16, k=16)") {
+    val sc = spark.sparkContext
+    val (r4, t4) = graft.JobTrace.run(sc)(BlockSolver.solve(spark, 16, numBlocks = 4, stepK = 16))
+    val (r1, t1) = graft.JobTrace.run(sc)(BlockSolver.solve(spark, 16, numBlocks = 1, stepK = 16))
+    // 132 iterations: 8 supersteps of 16, a 9th of 16 that converges
+    // part-way and is dropped, and its tail of 4: 148 iterations relaxed,
+    // each over the 14 × 14 interior cells once
+    assert(r4.supersteps.last === Laplace.Superstep(4, 1, tail = true))
+    val relaxed = r4.iterations + 16
+    assert(t4.counters("laplace.cells") === relaxed * 14L * 14)
+    assert(t1.counters("laplace.cells") === relaxed * 14L * 14)
+    checkAgainstOracle(16, r4)
+    checkAgainstOracle(16, r1)
+  }
+
+  test("coarsening mid-solve (N=64, 4 blocks): 4 blocks until k spans the grid, then one, bit-exact") {
+    // J = 20 ms, c = 3 ns: the first superstep runs at k = 16 on 4 blocks,
+    // the model's next k spans the grid, and the rest run on one block
+    val res = BlockSolver.solveWith(spark, 64, numBlocks = 4, maxIterations = Int.MaxValue,
+      stepK = 0, costs = Some((20e6, 3.0)))
+    assert(res.supersteps.head === Laplace.Superstep(16, 4), res.supersteps)
+    assert(res.supersteps.tail.nonEmpty && res.supersteps.tail.forall(_.blocks == 1), res.supersteps)
+    assert(res.grid.rdd.getNumPartitions === 4)
+    checkAgainstOracle(64, res)
+  }
+
+  test("a failed superstep releases everything the solve persisted and restores the caller's description") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      // N=16, k=16: superstep 1 gathers the 4 blocks into one, superstep 3
+      // runs on one block
+      for (at <- Seq(1, 3)) {
+        val before = sc.getPersistentRDDs.keySet
+        val e = intercept[IllegalStateException](BlockSolver.solveWith(spark, 16,
+          numBlocks = 4, maxIterations = Int.MaxValue, stepK = 16, costs = None,
+          fault = s => if (s == at) throw new IllegalStateException(s"injected fault in superstep $s")))
+        assert(e.getMessage === s"injected fault in superstep $at")
+        // RDD ids only grow, and the ContextCleaner may drop earlier ones:
+        // nothing the solve persisted is left
+        val left = sc.getPersistentRDDs.keySet -- before
+        assert(left.isEmpty, s"left persisted after a fault in superstep $at: $left")
+        assert(sc.getLocalProperty("spark.job.description") === "caller")
+      }
+    } finally sc.setJobDescription(null)
   }
 
   test("bad solver arguments fail fast, naming the argument") {
@@ -243,7 +309,7 @@ class LaplaceSpec extends SparkSpec {
       val want = "laplace n=16 init" +: ((1 to 26).map(s => s"laplace n=16 superstep $s k=5") ++
         Seq("laplace n=16 superstep 27 k=5", "laplace n=16 superstep 27 k=2 tail"))
       assert(got === want)
-      assert(res.supersteps === Seq.fill(26)(Laplace.Superstep(5)) :+ Laplace.Superstep(2, tail = true))
+      assert(res.supersteps === Seq.fill(26)(Laplace.Superstep(5, 4)) :+ Laplace.Superstep(2, 4, tail = true))
     } finally {
       sc.setJobDescription(null)
       sc.removeSparkListener(listener)
